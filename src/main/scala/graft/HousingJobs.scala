@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Cleaning
+import graft.operators.{Cleaning, StageMetrics}
 import graft.sources.{ListingParser, Sinks, Sources}
 import graft.ml.PriceModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -60,14 +60,16 @@ object HousingJobs {
   }
 
   /** Lifecycle 3: SQL round trip — pull two projections, union, append
-    * back (surrogate key dropped). Returns the row count appended. */
+    * back (surrogate key dropped). Returns the row count appended,
+    * observed on the append itself. */
   def sqlRoundTrip(spark: SparkSession, url: String, table: String,
       outTable: String, props: java.util.Properties): Long = {
     val full = Sources.jdbcTable(spark, url, table, props)
     val a = full.select("name", "price", "city")
     val b = full.select("name", "price", "city")
-    val unioned = a.union(b)
+    val (unioned, obs) = StageMetrics.observed(a.union(b), "sqlRoundTrip")
     Sinks.jdbcAppend(unioned, url, outTable, dropCols = Seq.empty, props = props)
-    unioned.count()
+    StageMetrics.observedRows(spark, obs).getOrElse(
+      throw new IllegalStateException(s"append to $outTable did not execute the pull"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.operators.StageMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -47,7 +48,8 @@ object JobRunner {
 
   /** Run every dataset in the config through its pipeline. Unknown
     * kinds and per-dataset failures are isolated (reference §4 error
-    * isolation) and reported in the result. */
+    * isolation) and reported in the result. A dataset's count is the
+    * rows its load wrote, observed on that one execution. */
   def run(
       spark: SparkSession,
       configJson: String,
@@ -62,8 +64,10 @@ object JobRunner {
             case Some(ex) =>
               val df = ex(spark, spec)
                 .transform(transforms.getOrElse(spec.name, identity[DataFrame] _))
-              load(spec.name, df)
-              Right(df.count())
+              val (observed, obs) = StageMetrics.observed(df, s"load ${spec.name}")
+              load(spec.name, observed)
+              StageMetrics.observedRows(spark, obs)
+                .toRight(s"load of '${spec.name}' did not execute the frame")
           }
         } catch { case e: Exception => Left(e.getMessage) }
       spec.name -> outcome

@@ -22,16 +22,10 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // heap comes from sbt's forked-JVM -Xmx (SPARK_DRIVER_MEM);
-      // spark.driver.memory is ignored in an already-running local JVM
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // heap comes from sbt's forked-JVM -Xmx (SPARK_DRIVER_MEM);
+    // spark.driver.memory is ignored in an already-running local JVM
+    val spark = SparkEntry.session(cpus)
     import spark.implicits._
 
     // Per-stage timer independent of the text corpus (the skew mode
@@ -332,105 +326,6 @@ object ScaleSmoke {
       return
     }
 
-    // targeted mode: `... <n> kmv` — the q476/q482 NDV story at row
-    // count n: exact COUNT(DISTINCT key) (map-side partial dedup +
-    // full shuffle of the value domain) vs the KMV-64 sketch path
-    // (per-partition bounded k-min-distinct fold, O(k·partitions)
-    // shuffle). Reports wall time for both and the sketch's relative
-    // error — the trade a 100 TB ANALYZE pass actually makes.
-    if (args.lift(1).contains("kmv")) {
-      val n = nDocs
-      val dir = java.nio.file.Files.createTempDirectory("smoke-kmv").toString
-      val nd = n / 8L
-      timedN(n)("write_fact") {
-        spark.range(n).select(
-          (($"id" * 2654435761L) % nd).as("key"),
-          md5($"id".cast("string")).as("payload"))
-          .write.mode("overwrite").parquet(dir)
-        n
-      }
-      val fact = spark.read.parquet(dir)
-      var exact = 0L
-      timedN(n)("exact_count_distinct") {
-        exact = fact.select($"key").distinct().count(); exact
-      }
-      var est = 0L
-      timedN(n)("kmv64_sketch") {
-        val hashed = fact.select(lit("key").as("colname"),
-          expr("cast(conv(substring(md5(concat(cast(key as string), " +
-            "'#kmv')), 1, 13), 16, 10) as bigint)").as("h13"))
-        val kth = operators.InferenceQueries
-          .kMinDistinct(hashed, "colname", "h13", 64)
-          .distinct()
-          .orderBy($"h13").limit(64)
-          .agg(org.apache.spark.sql.functions.max($"h13").as("kth"),
-            count(lit(1)).as("n_kept"))
-          .head()
-        est =
-          if (kth.getLong(1) < 64) kth.getLong(1)
-          else 63L * 4503599627370496L / kth.getLong(0)
-        est
-      }
-      println(f"[scale] kmv ndv: exact=$exact est=$est " +
-        f"err=${math.abs(est - exact) * 100.0 / exact}%.1f%%")
-      spark.stop()
-      return
-    }
-
-    // targeted mode: `... <n> kde` — q523's triangular-kernel shape:
-    // the ≤2-grid-point explode per row vs the naive rows×grid cross
-    // join (11 full passes of kernel arithmetic). Same exact integer
-    // result; the fan-out factor is the whole cost difference.
-    if (args.lift(1).contains("kde")) {
-      val n = nDocs
-      val xs = spark.range(n)
-        .select((($"id" * 2654435761L) % 1100L).as("x"))
-        .transform(graft.Fx.materialize)
-      timedN(n)("kde_two_point_explode") {
-        xs.select(explode(array(
-            struct(expr("(x div 100) * 100").as("p"),
-              (lit(100L) - ($"x" - expr("(x div 100) * 100"))).as("w")),
-            struct(expr("(x div 100) * 100 + 100").as("p"),
-              (lit(100L) - (expr("(x div 100) * 100 + 100") - $"x")).as("w"))))
-            .as("c"))
-          .select($"c.p", $"c.w")
-          .filter($"w" > 0L && $"p" >= 0L && $"p" <= 1000L)
-          .groupBy($"p").agg(sum($"w")).count()
-      }
-      timedN(n)("kde_cross_join_grid") {
-        val grid = spark.range(11).select(($"id" * 100L).as("p"))
-        xs.crossJoin(broadcast(grid))
-          .select($"p", greatest(lit(0L), lit(100L) - abs($"x" - $"p")).as("w"))
-          .filter($"w" > 0L)
-          .groupBy($"p").agg(sum($"w")).count()
-      }
-      // wide-grid regime: 1001 eval points over a 100k-wide domain —
-      // the explode stays 2 rows/doc, the cross join pays 1001 passes
-      val xw = spark.range(n)
-        .select((($"id" * 2654435761L) % 100100L).as("x"))
-        .transform(graft.Fx.materialize)
-      timedN(n)("kdew_two_point_explode") {
-        xw.select(explode(array(
-            struct(expr("(x div 100) * 100").as("p"),
-              (lit(100L) - ($"x" - expr("(x div 100) * 100"))).as("w")),
-            struct(expr("(x div 100) * 100 + 100").as("p"),
-              (lit(100L) - (expr("(x div 100) * 100 + 100") - $"x")).as("w"))))
-            .as("c"))
-          .select($"c.p", $"c.w")
-          .filter($"w" > 0L && $"p" >= 0L && $"p" <= 100000L)
-          .groupBy($"p").agg(sum($"w")).count()
-      }
-      timedN(n)("kdew_cross_join_grid") {
-        val grid = spark.range(1001).select(($"id" * 100L).as("p"))
-        xw.crossJoin(broadcast(grid))
-          .select($"p", greatest(lit(0L), lit(100L) - abs($"x" - $"p")).as("w"))
-          .filter($"w" > 0L)
-          .groupBy($"p").agg(sum($"w")).count()
-      }
-      spark.stop()
-      return
-    }
-
     if (args.lift(1).contains("compact")) {
       val dir = java.nio.file.Files.createTempDirectory("smoke-compact").toString
       val nFiles = math.max(16, nDocs.toInt)
@@ -559,97 +454,6 @@ object ScaleSmoke {
       return
     }
 
-    // targeted mode: `... <n> clamp` — the clamp-semigroup two-phase
-    // prefix vs the only exact alternative without it (one sequential
-    // task per group) on 4 groups × n/4 rows: the few-huge-groups
-    // regime the operator exists for
-    if (args.lift(1).contains("clamp")) {
-      val nGroups = args.lift(2).map(_.toInt).getOrElse(4)
-      val rows = spark.range(nDocs)
-        .select(pmod($"id", lit(nGroups)).as("g"),
-          ($"id" / nGroups).cast("long").as("ord"),
-          (pmod(xxhash64($"id"), lit(21)) - 10).cast("long").as("delta"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      var twoChk = 0L
-      var seqChk = 0L
-      timedN(nDocs)("clamp_two_phase") {
-        val out = graft.operators.Accumulate.clampedRunningBalance(
-          rows, Seq("g"), cpus.toInt, "delta", Some(0L), Some(100L), 0L, $"ord")
-        val r = out.agg(count(lit(1)),
-          bit_xor(xxhash64($"g", $"ord", $"balance"))).head()
-        twoChk = r.getLong(1)
-        r.getLong(0)
-      }
-      timedN(nDocs)("clamp_single_task") {
-        val folded = rows.select($"g", $"ord", $"delta")
-          .repartition(4, col("g"))
-          .sortWithinPartitions($"g", $"ord")
-          .as[(Long, Long, Long)]
-          .mapPartitions { it =>
-            var curG = Long.MinValue
-            var bal = 0L
-            it.map { case (g, ord, delta) =>
-              if (g != curG) { curG = g; bal = 0L }
-              bal = math.min(math.max(bal + delta, 0L), 100L)
-              (g, ord, bal)
-            }
-          }.toDF("g", "ord", "balance")
-        val r = folded.agg(count(lit(1)),
-          bit_xor(xxhash64($"g", $"ord", $"balance"))).head()
-        seqChk = r.getLong(1)
-        r.getLong(0)
-      }
-      println(s"[scale]   balance checksums equal: ${twoChk == seqChk}")
-      rows.unpersist()
-      spark.stop()
-      return
-    }
-
-    // targeted mode: `... <n> wmedian` measures the q326 weighted
-    // median: two-phase prefix over collapsed cells vs the per-brand
-    // cumulative window (25 low-cardinality groups → 25 straggler
-    // tasks in the window form once the cell relation is large)
-    if (args.lift(1).contains("wmedian")) {
-      import org.apache.spark.sql.expressions.Window
-      // price domain sized by arg 2 (default near-continuous): with a
-      // SMALL domain the cell relation is bounded and the per-brand
-      // window is fine; with a continuous domain cells ≈ n and each
-      // brand's window is a single-task sort of n/brands rows — the
-      // regime the two-phase prefix exists for (measured both)
-      val dom = args.lift(2).map(_.toLong).getOrElse(1000000000L)
-      val rows = spark.range(nDocs).select(
-        pmod($"id", lit(25L)).cast("string").as("brand"),
-        pmod(xxhash64($"id"), lit(dom)).as("price"),
-        (pmod(xxhash64($"id", lit(1)), lit(9L)) + 1L).as("qty"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      val cells = rows.groupBy($"brand", $"price")
-        .agg(sum($"qty").as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cells.count()
-      def select(cum: org.apache.spark.sql.DataFrame): Long = {
-        val tot = cells.groupBy($"brand").agg(sum($"w").as("tw"))
-          .withColumnRenamed("brand", "__b")
-        cum.join(broadcast(tot), $"brand" === $"__b")
-          .groupBy($"brand")
-          .agg(min(when($"cw" >= expr("(tw + 1) div 2"), $"price"))
-            .as("m"))
-          .collect().length.toLong
-      }
-      timedN(nDocs)("wmedian_2phase") {
-        select(graft.operators.Ranking
-          .groupRunningSum(cells, Seq("brand"), cpus.toInt, "w", $"price".asc)
-          .withColumn("cw", $"run_before" + $"w"))
-      }
-      timedN(nDocs)("wmedian_window") {
-        select(cells.withColumn("cw", sum($"w").over(
-          Window.partitionBy($"brand").orderBy($"price"))))
-      }
-      spark.stop()
-      return
-    }
-
     // targeted mode: `... <n> ivfpersist` — the build-once/search-many
     // economics of the persisted IVF index: KMeans train + assign +
     // save vs reopen + search vs rebuild-per-batch (what persistence
@@ -757,115 +561,6 @@ object ScaleSmoke {
           f"max_occ=${r.getLong(3)}%6d pairs_pregen=${r.getLong(4)}%10d")
       }
       bdocs.unpersist()
-      spark.stop()
-      return
-    }
-
-    // targeted mode: `... <n> md5ab` — the r19-verdict item-5 A/B,
-    // committed and reproducible: md5_fast (native Md5Hex) vs the
-    // BUILTIN md5 at corpus scale (zipf corpus, ~25-35 words/doc →
-    // ~20-27 8-word windows/doc), executor-CPU-measured via a task
-    // listener so ambient load can't fake the delta. Also isolates the
-    // r20 word_windows generator against the builtin window chain at
-    // the same scale. Each variant computes the identical digest-keyed
-    // aggregate (count + max digest — max forces every digest).
-    if (args.lift(1).contains("md5ab")) {
-      val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-      })
-      val bdocs = zipfDocs(nDocs)
-        .select($"doc_id", split($"text", " ").as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bN = bdocs.count()
-      val winBuiltin =
-        when(size($"w") >= 8,
-          array_distinct(transform(sequence(lit(1), size($"w") - 7),
-            i => array_join(slice($"w", i, lit(8)), " "))))
-          .otherwise(array().cast("array<string>"))
-      val winNative =
-        array_distinct(graft.plans.GraftFunctions.word_windows($"w", 8))
-      def digestPass(win: Column, h: Column => Column): Long =
-        bdocs.select(explode(win).as("g"))
-          .select(h($"g").as("h"))
-          .agg(count($"h"), max($"h")).head().getLong(0)
-      // The winNative pair is the CONTROLLED digest A/B: window
-      // construction is the cheap native generator on both sides, so
-      // the variant delta IS the digest cost (the winBuiltin pair's
-      // delta is confounded by the window chain's ~20× larger
-      // allocation volume — its GC waves swamp run-order stability).
-      val variants: Seq[(String, () => Long)] = Seq(
-        "winBuiltin_md5Builtin" -> (() => digestPass(winBuiltin, md5)),
-        "winBuiltin_md5Fast" -> (() => digestPass(winBuiltin,
-          graft.plans.GraftFunctions.md5_fast)),
-        "winNative_md5Builtin" -> (() => digestPass(winNative, md5)),
-        "winNative_md5Fast" -> (() => digestPass(winNative,
-          graft.plans.GraftFunctions.md5_fast)))
-      for (tag <- Seq("warm", "timed1", "timed2"); (name, f) <- variants) {
-        cpuNs.set(0)
-        val t0 = System.nanoTime()
-        val res = f()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] md5ab:$name:$tag%-34s $sec%8.2f s wall  " +
-          f"${cpuNs.get / 1e9}%8.2f s executor-CPU  ($res digests)")
-      }
-      bdocs.unpersist()
-      spark.stop()
-      return
-    }
-
-    // targeted mode: `... <n> spanprobe` — timed A/B of q556's dyadic
-    // gallop+bisection exact-span resolution against the r17 linear
-    // scan, on an identical materialized leaderboard frame over a
-    // LONG-DOC corpus (the regime the rewrite exists for: n docs of
-    // 1500 words, twin pairs sharing exactly a 70-word prefix, so the
-    // linear scan evaluates ~1437 window-digest passes per pair where
-    // the gallop needs ~7, all near L=70 where digests are cheap).
-    // Equality of Σ exact_span across the two resolutions is asserted.
-    if (args.lift(1).contains("spanprobe")) {
-      val n = nDocs
-      val wordsPerDoc = 1500
-      val dir = java.nio.file.Files.createTempDirectory("smoke-span").toString
-      spark.range(n).select($"id".as("doc_id"),
-        array_join(transform(sequence(lit(1), lit(wordsPerDoc)),
-          i => when($"id" % 100 < 2 && i <= 70,
-            concat(lit("c"), ($"id" - $"id" % 100).cast("string"), lit("_"), i))
-            .otherwise(concat(lit("w"), $"id".cast("string"), lit("_"), i))),
-          " ").as("text"),
-        lit("en").as("lang"), lit("s0").as("source"), lit(1L).as("n_chars"))
-        .coalesce(8).write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
-      // leaderboard + joined word arrays, built ONCE outside the timed
-      // A/B (the ladder is the corpus-wide cost both variants share)
-      val docsW = graft.Tables.documents(spark, dir)
-        .select($"doc_id", split($"text", " ").as("w"))
-      val joined = operators.TrainingQueries.q552(spark, dir)
-        .join(docsW.select($"doc_id".as("doc_a"), $"w".as("wa")), "doc_a")
-        .join(docsW.select($"doc_id".as("doc_b"), $"w".as("wb")), "doc_b")
-        .transform(Fx.materialize)
-      val nPairs = joined.count()
-      def dig(arr: Column, L: Column) =
-        operators.TrainingQueries.spanWinDigests(arr, L)
-      var sumDyadic = 0L
-      var sumLinear = 0L
-      timedN(nPairs)("q556_resolution_dyadic") {
-        sumDyadic = operators.TrainingQueries.resolveExactSpan(joined)
-          .agg(sum($"exact_span")).head().getLong(0)
-        nPairs
-      }
-      timedN(nPairs)("q556_resolution_linear_r17") {
-        sumLinear = joined.withColumn("exact_span",
-          array_max(filter(
-            sequence($"span_ge_w", least(size($"wa"), size($"wb")).cast("long")),
-            L => arrays_overlap(dig($"wa", L), dig($"wb", L)))))
-          .agg(sum($"exact_span")).head().getLong(0)
-        nPairs
-      }
-      require(sumDyadic == sumLinear,
-        s"resolution mismatch: dyadic=$sumDyadic linear=$sumLinear")
-      println(s"[scale] spanprobe parity: sum(exact_span) = $sumDyadic from $nPairs pairs (both variants)")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       spark.stop()
       return
     }
@@ -1095,7 +790,6 @@ object ScaleSmoke {
     // fast path vs seeded denormalized rows) and the two-phase
     // group-rank operator against the window it replaces
     if (args.lift(1).contains("rank")) {
-      graft.plans.GraftFunctions.register(spark)
       timed("nfc_ascii_fastpath") {
         docs.select(graft.plans.GraftFunctions.nfc_normalize($"text").as("t"))
           .agg(sum(length($"t"))).collect().length.toLong
@@ -1110,7 +804,7 @@ object ScaleSmoke {
         length($"text").as("v")).persist()
       rankIn.count()
       timed("group_ranks_2phase") {
-        graft.operators.Ranking.groupRanks(rankIn, Seq("grp"), cpus.toInt,
+        graft.operators.Ranking.groupRanks(rankIn, Seq("grp"), cpus,
           $"v".desc, $"doc_id").agg(max($"rank")).collect().length.toLong
       }
       timed("group_ranks_window") {
@@ -1154,7 +848,6 @@ object ScaleSmoke {
       Dedup.exactDedup(docs, "doc_id", "text").count()
     }
     timed("simhash64") {
-      graft.plans.GraftFunctions.register(spark)
       docs.select(graft.plans.GraftFunctions.simhash64($"text").as("sh"))
         .agg(bit_xor($"sh")).collect().length.toLong
     }
@@ -1300,7 +993,6 @@ object ScaleSmoke {
     // carry <= k counters per partition through the shuffle where the
     // exact plan shuffles the whole vocabulary.
     timed("heavy_hitters_mg100") {
-      graft.plans.MisraGries.register(spark)
       docs.select(explode(split($"text", " ")).as("w"))
         .agg(graft.plans.MisraGries.mg_topk($"w", 100).as("top"))
         .select(explode($"top")).count()
@@ -1316,7 +1008,6 @@ object ScaleSmoke {
     // digests per token occurrence, so this measures digest throughput
     // at ~40M tokens.
     timed("countmin_3x4096") {
-      graft.plans.CountMin.register(spark)
       docs.select(explode(split($"text", " ")).as("w"))
         .agg(graft.plans.CountMin.cm_sketch($"w", 3, 4096).as("sk"))
         .select(element_at(element_at($"sk", 1), 1)).collect().length.toLong
@@ -1336,7 +1027,6 @@ object ScaleSmoke {
     val vals = spark.range(nDocs).select(($"id" % 32).as("g"),
       pmod(xxhash64($"id"), lit(1000000)).cast("double").as("x"))
     timed("quantile_sketch_k256") {
-      graft.plans.QuantileSketch.register(spark)
       vals.groupBy($"g")
         .agg(graft.plans.QuantileSketch.qsketch($"x", 256, Seq(0.5, 0.99)).as("q"))
         .select(element_at($"q", 1)).collect().length.toLong

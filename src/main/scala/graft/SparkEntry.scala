@@ -10,6 +10,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The one session factory. Verify, Bench, ExplainAudit, ScaleSmoke
+    * and the test suite all build their session here, so correctness
+    * runs, benchmarks, plan audits and tests plan under the same confs
+    * and the same [[graft.plans.GraftExtensions]] (native SQL names and
+    * the FoldToNativeVectorOps rule). `cores` is the only thing the
+    * callers differ in. */
+  def session(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // events.parquet may carry INT64 TIMESTAMP(NANOS); Spark 4 reads
+      // it only as long under this flag (Fx.eventTs normalizes it).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def registry: Seq[QueryDef] =
     operators.Relational.all ++ operators.CleaningQueries.all ++
       operators.TextQueries.all ++ operators.DedupQueries.all ++

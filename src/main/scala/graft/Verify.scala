@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,9 @@ object Verify {
     // Optional extra args: restrict the dump to the named queries
     // (local dev loop); the driver always passes exactly two args.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the SQL-only-client contract, exercised for real on every run:
-      // a FRESH JVM/SparkContext applies the config-string extensions,
-      // so the native function family resolves by SQL name here
-      // without any register() call (SqlOnlyClientSpec covers the
-      // in-JVM variant via withExtensions)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // events.parquet carries INT64 TIMESTAMP(NANOS); Spark 4 reads it
-      // only as long under this flag (Tables.events converts to µs).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // A fresh JVM applies the config-string extensions, so the native
+    // function family resolves by SQL name here with no registration.
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Dump queries with bounded parallelism. Each worker gets its OWN
     // cloned session: temp views (SqlSurface) are session-scoped, so

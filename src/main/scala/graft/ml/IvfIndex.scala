@@ -47,7 +47,7 @@ object IvfIndex {
       .toSeq.toDF("cell", "centroid")
     val joined = queries.crossJoin(broadcast(cdf))
       .withColumn("cdist",
-        Similarity.cosineNative(queries,
+        Similarity.cosineNative(
           Similarity.toDoubleArr(col(qVec)), Similarity.toDoubleArr(col("centroid"))))
     graft.plans.TopK.perGroup(joined, nProbe, Seq(qId),
       Seq(graft.plans.TopK.desc("cdist"), graft.plans.TopK.asc("cell")))
@@ -76,7 +76,7 @@ object IvfIndex {
       .join(probes, Seq("cell"))
       .join(broadcast(queries), col(qId) === col("p_qid") && col(qId) =!= col(tId))
       .withColumn("sim",
-        Similarity.cosineNative(queries,
+        Similarity.cosineNative(
           Similarity.toDoubleArr(col(qVec)), Similarity.toDoubleArr(col(tVec))))
     val top = graft.plans.TopK.perGroup(candidates, k, Seq(qId),
       Seq(graft.plans.TopK.desc("sim"), graft.plans.TopK.asc(tId)))

@@ -45,7 +45,6 @@ object Accumulate {
       deltaCol: String, lo: Option[Long], hi: Option[Long], z0: Long,
       innerOrder: Column*): DataFrame = {
     import graft.plans.ClampFold._
-    graft.plans.ClampFold.register(df.sparkSession)
     // r19 (guide §2.5): floor semantics — the range-partition count
     // scales with the session's parallelism (balances are partitioning-
     // invariant by the semigroup construction, ClampFoldSpec pins it),

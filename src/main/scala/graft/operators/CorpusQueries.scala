@@ -356,7 +356,6 @@ object CorpusQueries {
     * right after the source costs ~one memchr per clean row. */
   def q211(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     import graft.plans.GraftFunctions.{nfc_is_normalized, nfc_normalize}
     val seeded = Tables.documents(s, d).select($"doc_id", $"lang",
       when($"doc_id" % 3 === 0, replace($"text", lit("a"), lit("a\u0301")))

@@ -1082,7 +1082,7 @@ object DecisionQueries {
     * Scale shape: each document contributes to AT MOST TWO grid
     * points (grid step = h), so the fan-out is a bounded 2-row
     * explode per doc, O(1) in the grid size, where a docs×grid cross
-    * join pays one pass per eval point. Measured (ScaleSmoke `kde`,
+    * join pays one pass per eval point. Measured (SCALE.md `kde`,
     * 20M rows): at THIS 11-point grid the broadcast cross join is
     * actually ~1.7× faster (pure codegen arithmetic beats the
     * explode's array materialization); at a 1001-point grid the
@@ -1970,7 +1970,7 @@ object DecisionQueries {
     val nCand = cand.groupBy($"q_id".as("cq"), $"radius".as("cr"))
       .agg(count(lit(1)).as("n_candidates"))
     val sims = cand.withColumn("sim",
-      Similarity.cosineNative(e, Similarity.toDoubleArr($"q_vec"),
+      Similarity.cosineNative(Similarity.toDoubleArr($"q_vec"),
         Similarity.toDoubleArr($"embedding")))
     val top = graft.plans.TopK.perGroup(sims, 10, Seq("q_id", "radius"),
         Seq(graft.plans.TopK.desc("sim"), graft.plans.TopK.asc("vec_id")))

@@ -185,7 +185,6 @@ object Dedup {
     * [[overflowBuckets]] with the same threshold. */
   def candidatePairs(bands: DataFrame, idCol: String,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    graft.plans.BoundedCollect.register(bands.sparkSession)
     val buckets = bands.groupBy(col("band_idx"), col("band_hash"))
       .agg(graft.plans.BoundedCollect.bounded_collect(col(idCol), maxBucket + 1).as("__ids"))
       .filter(size(col("__ids")).between(2, maxBucket))
@@ -224,7 +223,7 @@ object Dedup {
     val r = gated.select(col("__bucket").as("__bucket_r"), col(idCol).as("b_id"),
       Similarity.toDoubleArr(col(vecCol)).as("__vb"))
     l.join(r, l("__bucket") === r("__bucket_r") && l("a_id") < r("b_id"))
-      .withColumn("cos", Similarity.cosineNative(emb, col("__va"), col("__vb")))
+      .withColumn("cos", Similarity.cosineNative(col("__va"), col("__vb")))
       .filter(col("cos") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos"))
   }

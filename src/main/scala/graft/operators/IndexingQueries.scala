@@ -616,7 +616,6 @@ object IndexingQueries {
     // intermediate's per-token allocation still cost ~3× at 2M docs
     // under a cached corpus — byte-identical semantics (Md5ChunksSpec
     // pins the parity against the conv chain), q554Sql untouched.
-    graft.plans.GraftFunctions.register(s)
     val withH = toks
       .withColumn("__a1", graft.plans.GraftFunctions.md5_chunk($"w", 0))
       .withColumn("__a2", graft.plans.GraftFunctions.md5_chunk($"w", 1))
@@ -790,7 +789,6 @@ object IndexingQueries {
     // dropping them in-row was measured to cut the cap-crossing cost
     // hump (ScaleSmoke 400k point) without changing a single emitted
     // pair.
-    graft.plans.BoundedCollect.register(s)
     bucketize(bands, maxBucket)
       .transform(pairsFromBuckets(maxBucket, pfNum, pfDen))
       .distinct()
@@ -815,7 +813,6 @@ object IndexingQueries {
   private def bucketize(bands: DataFrame, maxBucket: Int): DataFrame = {
     val s = bands.sparkSession
     import s.implicits._
-    graft.plans.BoundedCollect.register(s)
     bands
       .groupBy($"band_idx", $"band_hash", $"source", $"lang")
       .agg(graft.plans.BoundedCollect

@@ -63,7 +63,7 @@ object InferenceQueries {
     * difference between a sketch and a COUNT(DISTINCT) at 100 TB.
     * mapPartitions is the honest implementation of bounded
     * sketch state here (no Catalyst aggregate exists for k-min-set). */
-  private[graft] def kMinDistinct(df: DataFrame, group: String, h: String,
+  private def kMinDistinct(df: DataFrame, group: String, h: String,
       k: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -902,7 +902,7 @@ object InferenceQueries {
     * sketch path never shuffles more than k rows per partition per
     * column and is DETERMINISTIC (md5 — unlike
     * approx_count_distinct's engine-specific HLL, this cross-checks
-    * exactly against DuckDB; ScaleSmoke `kmv` measures the gap).
+    * exactly against DuckDB; SCALE.md `kmv` records the gap).
     * Fewer than k distinct values → the sketch IS the exact count
     * (stated). The audit
     * column err_micro = |est − true|·10⁶ div true prices the k = 64

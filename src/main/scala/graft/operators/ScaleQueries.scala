@@ -315,7 +315,6 @@ object ScaleQueries {
     * doubles; QuantileSketchSpec pins that error bound empirically.) */
   def q157(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.QuantileSketch.register(s)
     Tables.documents(s, d)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
@@ -351,7 +350,6 @@ object ScaleQueries {
     * lossy regime and the parquet persistence round-trip. */
   def q160(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.QuantileSketch.registerPersistence(s)
     val partials = Tables.documents(s, d)
       .groupBy($"lang", $"source")
       .agg(graft.plans.QuantileSketch
@@ -781,7 +779,6 @@ object ScaleQueries {
     * (FrequentItemsSpec pins it). */
   def q177(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.MisraGries.register(s)
     val hourly = Tables.events(s, d)
       .groupBy(date_trunc("hour", $"ts").as("hour"))
       .agg(graft.plans.MisraGries.mg_bin($"event_type", 16).as("sk"))

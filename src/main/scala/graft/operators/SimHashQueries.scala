@@ -73,7 +73,6 @@ object SimHashQueries {
   /** Native SimHash64 + RollingHash expressions over documents. */
   def q56(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     Tables.documents(s, d)
       .select($"doc_id",
         GraftFunctions.simhash64($"text").as("simhash64"),

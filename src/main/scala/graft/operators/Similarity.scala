@@ -37,12 +37,9 @@ object Similarity {
   /** Native single-pass cosine ([[graft.plans.CosineSim]], codegen'd,
     * bit-identical to [[cosine]]'s fold): the fold form walks each
     * array three times through CodegenFallback higher-order functions;
-    * the native expression is one generated loop per row. Registers the
-    * function on the session owning `df`, then returns the call. */
-  def cosineNative(df: DataFrame, a: Column, b: Column): Column = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
+    * the native expression is one generated loop per row. */
+  def cosineNative(a: Column, b: Column): Column =
     graft.plans.GraftFunctions.vec_cosine(a, b)
-  }
 
   /** Reduce candidates to the k best rows per query with the native
     * bounded-heap TopKPerGroup operator, then rank the surviving ≤ k
@@ -67,7 +64,7 @@ object Similarity {
     val joined = targets.crossJoin(broadcast(queries))
       .filter(col(qId) =!= col(tId))
       .withColumn("sim",
-        cosineNative(targets, toDoubleArr(col(qVec)), toDoubleArr(col(tVec))))
+        cosineNative(toDoubleArr(col(qVec)), toDoubleArr(col(tVec))))
     rankTopK(joined, k, qId, tId)
   }
 
@@ -241,7 +238,7 @@ object Similarity {
     val t = targets.withColumn("t_bucket", signBucket(col(tVec), bits))
     val joined = t.join(broadcast(q), col("q_bucket") === col("t_bucket") && col(qId) =!= col(tId))
       .withColumn("sim",
-        cosineNative(targets, toDoubleArr(col(qVec)), toDoubleArr(col(tVec))))
+        cosineNative(toDoubleArr(col(qVec)), toDoubleArr(col(tVec))))
     rankTopK(joined, k, qId, tId)
   }
 }

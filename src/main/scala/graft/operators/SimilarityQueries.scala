@@ -152,7 +152,7 @@ object SimilarityQueries {
     val t = Tables.embeddings(s, d).select($"vec_id", $"embedding")
     val pairs = t.crossJoin(broadcast(queriesDf(s, d)))
       .filter($"vec_id" =!= $"q_id")
-      .withColumn("cos", Similarity.cosineNative(t,
+      .withColumn("cos", Similarity.cosineNative(
         Similarity.toDoubleArr($"q_vec"), Similarity.toDoubleArr($"embedding")))
       .withColumn("dp", Similarity.dot(
         Similarity.toDoubleArr($"q_vec"), Similarity.toDoubleArr($"embedding")))
@@ -364,7 +364,7 @@ object SimilarityQueries {
         $"label".as("a_label"))
     val joined = emb.crossJoin(broadcast(anchors))
       .filter($"a_id" =!= $"vec_id")
-      .withColumn("sim", Similarity.cosineNative(emb,
+      .withColumn("sim", Similarity.cosineNative(
         Similarity.toDoubleArr($"a_vec"), Similarity.toDoubleArr($"embedding")))
     def best(cands: DataFrame, idAs: String, simAs: String): DataFrame =
       graft.plans.TopK.perGroup(cands, 1, Seq("a_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pipeline observability (SURVEY §2.2 K7): the reference logs
@@ -19,5 +19,13 @@ object StageMetrics {
     val metrics = count(lit(1)).as("rows") +: nullCheckCol.toSeq.map(c =>
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
     (df.observe(obs, metrics.head, metrics.tail: _*), obs)
+  }
+
+  /** Rows the observed frame produced, read after the action that was
+    * meant to execute it has returned; `None` if no action did. Never
+    * blocks on an observation that cannot complete. */
+  def observedRows(spark: SparkSession, obs: Observation): Option[Long] = {
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    obs.future.value.flatMap(_.toOption).map(_.getAs[Long]("rows"))
   }
 }

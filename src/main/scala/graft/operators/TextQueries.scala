@@ -280,7 +280,6 @@ object TextQueries {
     * FrequentItemsSpec's n/(k+1) error-bound test. */
   def q128(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.MisraGries.register(s)
     Tables.documents(s, d)
       .select(explode(split($"text", " ")).as("w"))
       .filter($"w" =!= "")
@@ -314,7 +313,6 @@ object TextQueries {
     * degenerate exact regime. */
   def q141(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.CountMin.register(s)
     val depth = 3
     val width = 32
     val toks = Tables.documents(s, d)

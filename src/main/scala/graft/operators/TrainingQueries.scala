@@ -353,7 +353,6 @@ object TrainingQueries {
     * FNV-1a mirror). */
   def q99(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     val sh = Tables.documents(s, d)
       .select($"doc_id", graft.plans.GraftFunctions.simhash64($"text").as("sh"))
     val bands = sh.select($"doc_id", $"sh",
@@ -702,10 +701,8 @@ object TrainingQueries {
   }
 
   /** The gallop + bisection resolution over a joined leaderboard frame
-    * (doc_a, doc_b, span_ge_w, shared_w8, wa, wb) → + exact_span.
-    * Package-visible so ScaleSmoke's span probe can time it against
-    * the r17 linear scan on an IDENTICAL materialized frame. */
-  private[graft] def resolveExactSpan(joined: DataFrame): DataFrame = {
+    * (doc_a, doc_b, span_ge_w, shared_w8, wa, wb) → + exact_span. */
+  private def resolveExactSpan(joined: DataFrame): DataFrame = {
     val s = joined.sparkSession
     import s.implicits._
     def sharedAt(L: Column): Column =
@@ -755,7 +752,7 @@ object TrainingQueries {
 
   /** All L-word window digests of a word array (1-based starts; both
     * engines md5 the same space-joined strings). */
-  private[graft] def spanWinDigests(arr: Column, L: Column): Column =
+  private def spanWinDigests(arr: Column, L: Column): Column =
     transform(sequence(lit(1), size(arr) - L.cast("int") + 1),
       i => md5_fast(array_join(slice(arr, i, L.cast("int")), " ")))
 

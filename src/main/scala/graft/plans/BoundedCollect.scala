@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** `bounded_collect(col, cap)` — collect_list with a hard per-group
@@ -26,25 +26,8 @@ import org.apache.spark.sql.types._
   */
 object BoundedCollect {
 
-  /** Registers `bounded_collect(col, cap)`; cap must be a foldable int
-    * literal. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_collect",
-      es => {
-        val cap = es(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"bounded_collect cap must be an int literal, got $other")
-        }
-        BoundedCollectLong(es.head, cap).toAggregateExpression()
-      },
-      "scala_udf")
-
   def bounded_collect(c: Column, cap: Int): Column =
-    call_function("bounded_collect", c,
-      org.apache.spark.sql.functions.lit(cap))
+    Bridge.column(BoundedCollectLong(Bridge.expression(c), cap).toAggregateExpression())
 }
 
 /** Growable long buffer capped at `cap` elements. */

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** The clamp semigroup: one row's contribution to a bounded running
@@ -162,9 +161,10 @@ object ClampFoldAgg {
 }
 
 object ClampFold {
-  /** Column builder (requires [[register]] or GraftExtensions). */
-  def clamp_fold(delta: Column, lo: Column, hi: Column): Column =
-    call_function("clamp_fold", delta, lo, hi)
+  def clamp_fold(delta: Column, lo: Column, hi: Column): Column = {
+    import org.apache.spark.sql.graft.Bridge.{column, expression => e}
+    column(ClampFoldAgg(e(delta), e(lo), e(hi)).toAggregateExpression())
+  }
 
   /** Apply a composite triple column to a start value: the balance
     * after the folded rows. Pure Column arithmetic (codegen'd). */
@@ -176,10 +176,4 @@ object ClampFold {
     when(triple.getField("hi").isNotNull,
       least(lod, triple.getField("hi"))).otherwise(lod)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "clamp_fold",
-      es => ClampFoldAgg(es(0), es(1), es(2)).toAggregateExpression(),
-      "scala_udf")
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -33,27 +33,8 @@ object CountMin {
     (v % width).toInt
   }
 
-  /** Registers `cm_sketch(col, depth, width)`; depth/width must be
-    * foldable int literals. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cm_sketch",
-      es => {
-        def intLit(e: Expression, what: String): Int = e.eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"cm_sketch $what must be an int literal, got $other")
-        }
-        CountMinSketch(es.head, intLit(es(1), "depth"), intLit(es(2), "width"))
-          .toAggregateExpression()
-      },
-      "scala_udf")
-
   def cm_sketch(c: Column, depth: Int, width: Int): Column =
-    call_function("cm_sketch", c,
-      org.apache.spark.sql.functions.lit(depth),
-      org.apache.spark.sql.functions.lit(width))
+    Bridge.column(CountMinSketch(Bridge.expression(c), depth, width).toAggregateExpression())
 }
 
 /** Mutable d×w counter grid, flattened row-major. */

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -261,32 +260,8 @@ case class MgMergeAgg(
 }
 
 object MisraGries {
-  /** Registers `mg_topk(col, k)` / `mg_bin(col, k)` / `mg_merge(bin)`;
-    * k must be a foldable int literal. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    def litK(e: Expression, fn: String): Int = e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"$fn capacity must be an int literal, got $other")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk",
-      es => MisraGries(es.head, litK(es(1), "mg_topk")).toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_bin",
-      es => MgBinAgg(es.head, litK(es(1), "mg_bin")).toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_merge",
-      es => MgMergeAgg(es.head).toAggregateExpression(),
-      "scala_udf")
-  }
-
-  def mg_topk(c: Column, k: Int): Column =
-    call_function("mg_topk", c, org.apache.spark.sql.functions.lit(k))
-  def mg_bin(c: Column, k: Int): Column =
-    call_function("mg_bin", c, org.apache.spark.sql.functions.lit(k))
-  def mg_merge(c: Column): Column = call_function("mg_merge", c)
+  import org.apache.spark.sql.graft.Bridge.{column, expression => e}
+  def mg_topk(c: Column, k: Int): Column = column(MisraGries(e(c), k).toAggregateExpression())
+  def mg_bin(c: Column, k: Int): Column = column(MgBinAgg(e(c), k).toAggregateExpression())
+  def mg_merge(c: Column): Column = column(MgMergeAgg(e(c)).toAggregateExpression())
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -237,22 +236,8 @@ object HllDistinct {
     case other => XXH64.hashLong(other.hashCode().toLong, 42L)
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_distinct",
-      es => HllDistinct(es.head).toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_bin",
-      es => HllBinAgg(es.head).toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_merge",
-      es => HllMergeAgg(es.head).toAggregateExpression(),
-      "scala_udf")
-  }
-
-  def hll_distinct(c: Column): Column = call_function("hll_distinct", c)
-  def hll_bin(c: Column): Column = call_function("hll_bin", c)
-  def hll_merge(c: Column): Column = call_function("hll_merge", c)
+  import org.apache.spark.sql.graft.Bridge.{column, expression => e}
+  def hll_distinct(c: Column): Column = column(HllDistinct(e(c)).toAggregateExpression())
+  def hll_bin(c: Column): Column = column(HllBinAgg(e(c)).toAggregateExpression())
+  def hll_merge(c: Column): Column = column(HllMergeAgg(e(c)).toAggregateExpression())
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Mutable compactor-stack quantile summary (the MRL/KLL shape with
@@ -275,66 +274,16 @@ case class QuantileSketchMergeAgg(
 }
 
 object QuantileSketch {
-  /** Registers `qsketch(col, k, ps_array)`; k and ps must be foldable
-    * literals. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "qsketch",
-      es => {
-        val k = es(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"qsketch capacity must be an int literal, got $other")
-        }
-        val ps = es(2).eval(null) match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-            a.toDoubleArray()
-          case other => throw new IllegalArgumentException(
-            s"qsketch fractions must be an array<double> literal, got $other")
-        }
-        QuantileSketchAgg(es.head, k, ps).toAggregateExpression()
-      },
-      "scala_udf")
-
+  import org.apache.spark.sql.graft.Bridge.{column, expression => e}
   def qsketch(c: Column, k: Int, ps: Seq[Double]): Column =
-    call_function("qsketch", c, org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(ps.toArray))
+    column(QuantileSketchAgg(e(c), k, ps).toAggregateExpression())
 
-  /** Registers the persistence pair: `qsketch_bin(col, k)` (emit a
-    * serialized partial sketch) and `qsketch_merge(bin, ps)` (merge
-    * persisted sketches, answer quantiles). */
-  def registerPersistence(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "qsketch_bin",
-      es => {
-        val k = es(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"qsketch_bin capacity must be an int literal, got $other")
-        }
-        QuantileSketchBinAgg(es.head, k).toAggregateExpression()
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "qsketch_merge",
-      es => {
-        val ps = es(1).eval(null) match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-            a.toDoubleArray()
-          case other => throw new IllegalArgumentException(
-            s"qsketch_merge fractions must be an array<double> literal, got $other")
-        }
-        QuantileSketchMergeAgg(es.head, ps).toAggregateExpression()
-      },
-      "scala_udf")
-  }
-
+  /** The persistence pair: `qsketch_bin` emits a serialized partial
+    * sketch, `qsketch_merge` merges persisted sketches and answers
+    * quantiles. */
   def qsketch_bin(c: Column, k: Int): Column =
-    call_function("qsketch_bin", c, org.apache.spark.sql.functions.lit(k))
+    column(QuantileSketchBinAgg(e(c), k).toAggregateExpression())
 
   def qsketch_merge(c: Column, ps: Seq[Double]): Column =
-    call_function("qsketch_merge", c,
-      org.apache.spark.sql.functions.lit(ps.toArray))
+    column(QuantileSketchMergeAgg(e(c), ps).toAggregateExpression())
 }

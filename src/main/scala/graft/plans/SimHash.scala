@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -101,59 +100,25 @@ case class RollingHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session registration + Column-API entry points. Spark 4 no longer
-  * exposes `new Column(Expression)`, so the Column API goes through the
-  * function registry: call [[register]] once per session, then
-  * `simhash64($"text")`. */
+/** Column-API entry points of the scalar natives. Each is built
+  * directly as a Column over the native expression (Spark 4 no longer
+  * exposes `new Column(Expression)`, hence the Bridge), so no session
+  * needs a registration. The SQL names live in [[GraftExtensions]]. */
 object GraftFunctions {
-  def simhash64(c: Column): Column = call_function("simhash64", c)
-  def md5_chunks(c: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      Md5Chunks(org.apache.spark.sql.graft.Bridge.expression(c)))
-  def md5_chunk(c: Column, idx: Int): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      Md5Chunk(org.apache.spark.sql.graft.Bridge.expression(c), idx))
-  /** Drop-in fast `md5` over STRING (bit-identical hex; [[Md5Hex]]).
-    * Built via the Bridge, NOT the function registry, so call sites
-    * need no register()/extensions ordering — usable from any session. */
-  def md5_fast(c: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      Md5Hex(org.apache.spark.sql.graft.Bridge.expression(c)))
+  import org.apache.spark.sql.graft.Bridge.{column, expression => e}
+  def simhash64(c: Column): Column = column(SimHash64(e(c)))
+  def md5_chunks(c: Column): Column = column(Md5Chunks(e(c)))
+  def md5_chunk(c: Column, idx: Int): Column = column(Md5Chunk(e(c), idx))
+  /** Drop-in fast `md5` over STRING (bit-identical hex; [[Md5Hex]]). */
+  def md5_fast(c: Column): Column = column(Md5Hex(e(c)))
   /** All sliding W-word windows of a word array, ' '-joined —
     * byte-identical to transform(sequence(1, n-W+1), i ->
     * array_join(slice(arr, i, W), " ")) with the n < W empty-array
-    * guard folded in ([[WordWindows]]). Bridge-built like md5_fast:
-    * no registration order. */
-  def word_windows(c: Column, w: Int): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      WordWindows(org.apache.spark.sql.graft.Bridge.expression(c), w))
-  def rolling_hash(c: Column): Column = call_function("rolling_hash", c)
-  def vec_cosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
-  def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-  def nfc_normalize(c: Column): Column = call_function("nfc_normalize", c)
-  def nfc_is_normalized(c: Column): Column = call_function("nfc_is_normalized", c)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("md5_chunks", es => Md5Chunks(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("md5_chunk", es => Md5Chunk(es(0),
-      es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"md5_chunk index must be an int literal, got $other")
-      }), "scala_udf")
-    reg.createOrReplaceTempFunction("md5_fast", es => Md5Hex(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("word_windows", es => WordWindows(es(0),
-      es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"word_windows width must be an int literal, got $other")
-      }), "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_hash", es => RollingHash(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_cosine", es => CosineSim(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_dot", es => DotProduct(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize", es => NfcNormalize(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_is_normalized", es => NfcIsNormalized(es.head), "scala_udf")
-  }
+    * guard folded in ([[WordWindows]]). */
+  def word_windows(c: Column, w: Int): Column = column(WordWindows(e(c), w))
+  def rolling_hash(c: Column): Column = column(RollingHash(e(c)))
+  def vec_cosine(a: Column, b: Column): Column = column(CosineSim(e(a), e(b)))
+  def vec_dot(a: Column, b: Column): Column = column(DotProduct(e(a), e(b)))
+  def nfc_normalize(c: Column): Column = column(NfcNormalize(e(c)))
+  def nfc_is_normalized(c: Column): Column = column(NfcIsNormalized(e(c)))
 }

@@ -175,7 +175,6 @@ object NearDupStream {
   private def banded(docs: DataFrame): org.apache.spark.sql.Dataset[BandedDoc] = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.plans.GraftFunctions.register(s)
     docs
       .select($"doc_id", graft.plans.GraftFunctions.simhash64($"text").as("sh"))
       .select($"doc_id", $"sh", packedBands($"sh").as("band"))

@@ -29,6 +29,13 @@ object Bridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** Block until every listener event posted so far is delivered.
+    * `Observation` results arrive through a QueryExecutionListener on
+    * the asynchronous bus, so after an action returns this makes
+    * "was the observed frame executed?" a deterministic question. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Catalyst Expression behind a (possibly unresolved) Column. */
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)

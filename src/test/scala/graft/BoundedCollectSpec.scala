@@ -7,7 +7,6 @@ class BoundedCollectSpec extends SparkSpec {
 
   test("collects exactly under the cap, truncates at cap, skips nulls") {
     import spark.implicits._
-    BoundedCollect.register(spark)
     val df = Seq(
       ("small", Some(3L)), ("small", Some(1L)), ("small", Some(2L)),
       ("nulls", Some(7L)), ("nulls", None),
@@ -25,7 +24,6 @@ class BoundedCollectSpec extends SparkSpec {
 
   test("cap bounds the buffer across merges (many partitions)") {
     import spark.implicits._
-    BoundedCollect.register(spark)
     val df = spark.range(0, 10000).repartition(32)
       .select(lit("k").as("k"), $"id")
     val n = df.groupBy($"k")
@@ -36,7 +34,6 @@ class BoundedCollectSpec extends SparkSpec {
 
   test("rejects a non-bigint child at analysis time") {
     import spark.implicits._
-    BoundedCollect.register(spark)
     val err = intercept[Exception] {
       Seq("a").toDF("s").agg(BoundedCollect.bounded_collect($"s", 4)).collect()
     }

@@ -20,7 +20,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   private def sketchEstimates(data: Seq[String]): Map[String, Long] = {
-    CountMin.register(spark)
     import spark.implicits._
     val df = data.toDF("w").repartition(8)
     val sk = df.agg(CountMin.cm_sketch($"w", depth, width).as("sk"))
@@ -55,7 +54,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("merge is exact: partition layout cannot change the grid") {
-    CountMin.register(spark)
     import spark.implicits._
     val data = (1 to 5000).map(i => s"x${i % 97}")
     def grid(parts: Int): Seq[Seq[Long]] =
@@ -78,7 +76,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("non-string child rejected at analysis time") {
-    CountMin.register(spark)
     import spark.implicits._
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(1, 2).toDF("n").agg(expr("cm_sketch(n, 3, 64)")).collect()

@@ -10,7 +10,6 @@ class FrequentItemsSpec extends SparkSpec {
     rows.map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("exact regime: k >= distinct count reproduces the full count table") {
-    MisraGries.register(spark)
     import spark.implicits._
     val df = (1 to 5000).map(i => s"v${i % 17}").toDF("s").repartition(8)
     val got = summary(
@@ -22,7 +21,6 @@ class FrequentItemsSpec extends SparkSpec {
   }
 
   test("lossy regime: n/(k+1) error bound holds and heavy items survive") {
-    MisraGries.register(spark)
     import spark.implicits._
     // 3 heavy items (10k each) + 5000 singleton tail, shuffled across
     // partitions so merge() runs for real.
@@ -58,7 +56,6 @@ class FrequentItemsSpec extends SparkSpec {
   }
 
   test("non-string child is rejected at analysis time, not runtime") {
-    MisraGries.register(spark)
     import spark.implicits._
     val df = Seq(1, 2, 2, 3).toDF("n")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
@@ -68,7 +65,6 @@ class FrequentItemsSpec extends SparkSpec {
   }
 
   test("nulls ignored, output deterministically ordered") {
-    MisraGries.register(spark)
     import spark.implicits._
     val df = Seq(Some("x"), None, Some("y"), Some("x"), None).toDF("s")
     val rows = df.agg(MisraGries.mg_topk($"s", 8).as("top"))
@@ -79,7 +75,6 @@ class FrequentItemsSpec extends SparkSpec {
 
   test("mg_bin/mg_merge: persisted partials roll up losslessly in the exact regime") {
     import spark.implicits._
-    graft.plans.MisraGries.register(spark)
     // 3 shards × skewed items; k=8 ≥ 4 distinct → exact everywhere.
     val rows = (1 to 300).map { i =>
       (i % 3, if (i % 7 == 0) "rare" else s"w${i % 3}")
@@ -99,7 +94,6 @@ class FrequentItemsSpec extends SparkSpec {
 
   test("mg_merge on the lossy path keeps capacity from the wire format") {
     import spark.implicits._
-    graft.plans.MisraGries.register(spark)
     // k=2 over 5 distinct: the merged summary must keep ≤ 2 counters
     // and still surface the dominant item.
     val rows = (1 to 1000).map(i => (i % 4, if (i % 5 == 0) s"t${i % 5}" else "dom"))

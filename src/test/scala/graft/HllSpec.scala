@@ -6,7 +6,6 @@ class HllSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
   test("HLL distinct estimate within 5% of exact on lineitem partkeys") {
-    HllDistinct.register(spark)
     val li = Tables.lineitem(spark, "/root/testdata/sf0.01")
     val r = li.agg(
       countDistinct(col("l_partkey")).as("exact"),
@@ -17,7 +16,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("HLL works grouped and via SQL, merges across partitions") {
-    HllDistinct.register(spark)
     import spark.implicits._
     val df = (1 to 20000).map(i => (i % 4, s"v${i % 1000}")).toDF("g", "s")
       .repartition(8)
@@ -50,11 +48,10 @@ class HllSpec extends SparkSpec {
 
   test("hll_distinct/hll_bin reject array input at analysis time (representation-dependent hash)") {
     import spark.implicits._
-    HllDistinct.register(spark)
     val df = Seq(Seq(1L, 2L), Seq(3L)).toDF("xs")
     for (agg <- Seq(
         HllDistinct.hll_distinct(col("xs")),
-        call_function("hll_bin", col("xs")))) {
+        expr("hll_bin(xs)"))) {
       val e = intercept[org.apache.spark.sql.AnalysisException](
         df.agg(agg).collect())
       assert(e.getMessage.contains("atomic input type"),
@@ -63,7 +60,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("HLL of nulls-only input estimates zero") {
-    HllDistinct.register(spark)
     import spark.implicits._
     val df = Seq[Option[String]](None, None).toDF("s")
     assert(df.agg(HllDistinct.hll_distinct(col("s"))).head.getLong(0) == 0L)
@@ -71,7 +67,6 @@ class HllSpec extends SparkSpec {
 
   test("HLL cube: sharded hll_bin -> hll_merge rollup is LOSSLESS vs whole-data sketch") {
     import spark.implicits._
-    HllDistinct.register(spark)
     val rows = (1 to 50000).map(i => (s"d${i % 13}", s"user${i % 7321}"))
     val df = rows.toDF("day", "u")
     val dir = java.nio.file.Files.createTempDirectory("hllcube").toString + "/cube"
@@ -92,7 +87,6 @@ class HllSpec extends SparkSpec {
 
   test("hll_merge survives all-null partitions (empty placeholder on either merge side)") {
     import spark.implicits._
-    HllDistinct.register(spark)
     // one day's sketch + null sketch rows isolated in their own
     // partitions: those partials stay the 16-register placeholder and
     // must merge harmlessly with the real 2048-register sketch in
@@ -108,7 +102,6 @@ class HllSpec extends SparkSpec {
 
   test("HLL sketch algebra: intersection estimate via inclusion-exclusion over shard sketches") {
     import spark.implicits._
-    HllDistinct.register(spark)
     // two sources with a known overlap: A = 0..5999, B = 4000..9999
     val a = (0 until 6000).map(i => ("A", s"u$i"))
     val b = (4000 until 10000).map(i => ("B", s"u$i"))

@@ -18,7 +18,6 @@ class Md5ChunksSpec extends SparkSpec {
 
   test("md5_chunks matches the conv(substring(md5)) oracle derivation bit-for-bit") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = texts.toDF("t")
     val viaConv = df.select((1 to 4).map(i =>
       conv(substring(md5($"t"), (i - 1) * 8 + 1, 8), 16, 10).cast("long")
@@ -46,7 +45,6 @@ class Md5ChunksSpec extends SparkSpec {
 
   test("scalar md5_chunk(w, i) matches the array form element-wise (memoized digest)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = texts.toDF("t")
     val viaArray = df.select((1 to 4).map(i =>
       element_at(GraftFunctions.md5_chunks($"t"), i).as(s"a$i")): _*)
@@ -71,7 +69,6 @@ class Md5ChunksSpec extends SparkSpec {
 
   test("md5_chunks matches a JDK MessageDigest model and is null-safe") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def model(s: String): Seq[Long] = {
       val d = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8"))
@@ -91,7 +88,6 @@ class Md5ChunksSpec extends SparkSpec {
 
   test("md5_fast is bit-identical to builtin md5 over strings, null/empty included") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // interpreter path AND codegen path must both match the builtin:
     // alternating lengths exercise the grow-on-demand buffer reuse
     val long1 = (1 to 5000).map(i => s"w$i").mkString(" ")

@@ -58,7 +58,6 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("distributed agg: serde + partial-merge path matches exact (exact regime)") {
     import spark.implicits._
-    QuantileSketch.register(spark)
     val rnd = new scala.util.Random(17)
     val rows = (1 to 5000).map(i => (s"g${i % 3}", rnd.nextDouble() * 100))
     val df = rows.toDF("g", "x").repartition(4)
@@ -73,8 +72,6 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("sketch persistence: binary round-trip through parquet, merged rollup == direct (exact regime)") {
     import spark.implicits._
-    QuantileSketch.register(spark)
-    QuantileSketch.registerPersistence(spark)
     val rnd = new scala.util.Random(19)
     val rows = (1 to 3000).map(i => (s"d${i % 5}", rnd.nextDouble() * 10))
     val df = rows.toDF("day", "x")
@@ -98,7 +95,6 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("sketch persistence: lossy-regime rollup keeps the rank bound") {
     import spark.implicits._
-    QuantileSketch.registerPersistence(spark)
     val rnd = new scala.util.Random(23)
     val rows = (1 to 100000).map(i => (s"d${i % 20}", rnd.nextGaussian()))
     val df = rows.toDF("day", "x")
@@ -114,7 +110,6 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("analysis-time rejection of non-double children") {
     import spark.implicits._
-    QuantileSketch.register(spark)
     val err = intercept[Exception] {
       Seq("a").toDF("s")
         .agg(QuantileSketch.qsketch($"s", 16, Seq(0.5))).collect()

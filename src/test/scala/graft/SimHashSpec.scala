@@ -22,7 +22,6 @@ class SimHashSpec extends SparkSpec {
 
   test("SimHash64 expression matches the model, via SQL and Column API") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val texts = Seq("the quick brown fox", "a b c", "single", "x  y")
     val df = texts.toDF("t")
     val got = df.select(GraftFunctions.simhash64(col("t"))).collect().map(_.getLong(0))
@@ -43,7 +42,6 @@ class SimHashSpec extends SparkSpec {
   }
 
   test("rolling hash matches java-style polynomial hash and differs on permutation") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     def model(s: String): Long =
       s.getBytes("UTF-8").foldLeft(0L)((h, b) => h * 31L + (b & 0xffL))
@@ -55,14 +53,12 @@ class SimHashSpec extends SparkSpec {
 
   test("null input yields null") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq[Option[String]](None).toDF("t")
     assert(df.select(GraftFunctions.simhash64(col("t"))).head.isNullAt(0))
   }
 
   test("non-string input is rejected at analysis") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(1).toDF("n")
     intercept[Exception] {
       df.select(GraftFunctions.simhash64(col("n"))).collect()

@@ -1,45 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The SQL-only-client contract: a session built with
   * `spark.sql.extensions=graft.plans.GraftExtensions` — the exact
   * config a thrift/connect client supplies — reaches EVERY native
-  * function by SQL string, with `GraftFunctions.register` never
-  * called. One round-trip per injected function.
+  * function by SQL string, with no registration call. The shared test
+  * session is built that way ([[SparkEntry.session]]), so this spec
+  * exercises the config-string path itself. One round-trip per
+  * injected function.
   */
 class SqlOnlyClientSpec extends SparkSpec {
 
-  /** A fresh SparkSession over the shared test SparkContext with the
-    * extensions applied the config-string way. Default/active session
-    * are restored immediately so the other (sequential) suites are
-    * untouched. */
-  private lazy val sqlOnly: SparkSession = {
-    val base = spark // force the shared context into existence first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // `withExtensions(new GraftExtensions())` attaches the SAME
-    // injection object the `spark.sql.extensions=graft.plans.
-    // GraftExtensions` config names. The config-string spelling cannot
-    // be exercised in this JVM — it is read from the STATIC conf of
-    // the SparkContext, which the suite shares — but everything
-    // engine-side (every injectFunction/injectOptimizerRule reaching a
-    // session that never calls GraftFunctions.register) is identical;
-    // the config→class instantiation step is Spark's own plumbing.
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    assert(s ne base, "got the shared session back — extensions not exercised")
-    s
-  }
-
   test("scalar natives round-trip by SQL string") {
-    val r = sqlOnly.sql(
+    val r = spark.sql(
       """SELECT simhash64('a b c')                            AS sh,
         |       rolling_hash('abc')                           AS rh,
         |       vec_cosine(array(1d, 2d), array(1d, 2d))      AS vc,
@@ -47,9 +19,8 @@ class SqlOnlyClientSpec extends SparkSpec {
         |       nfc_normalize('é')                      AS nn,
         |       nfc_is_normalized('é')                  AS ni
         |""".stripMargin).head()
-    // parity with the Column-API path on the main session
+    // parity with the Column-API path
     import org.apache.spark.sql.functions.{col, lit}
-    graft.plans.GraftFunctions.register(spark)
     val expectSh = spark.range(1)
       .select(graft.plans.GraftFunctions.simhash64(lit("a b c"))).head().getLong(0)
     assert(r.getLong(0) === expectSh)
@@ -62,48 +33,48 @@ class SqlOnlyClientSpec extends SparkSpec {
   }
 
   test("sketch aggregates round-trip by SQL string") {
-    sqlOnly.range(0, 1000)
+    spark.range(0, 1000)
       .selectExpr("cast(id % 37 as string) AS s", "cast(id % 37 as double) AS v",
         "cast(id % 4 as int) AS g")
       .createOrReplaceTempView("sk")
 
-    val hll = sqlOnly.sql("SELECT hll_distinct(s) AS est FROM sk").head().getLong(0)
+    val hll = spark.sql("SELECT hll_distinct(s) AS est FROM sk").head().getLong(0)
     assert(hll === 37L, s"hll exact at small cardinality, got $hll")
 
-    val merged = sqlOnly.sql(
+    val merged = spark.sql(
       """SELECT hll_merge(b) AS est
         |FROM (SELECT hll_bin(s) AS b FROM sk GROUP BY g)""".stripMargin)
       .head().getLong(0)
     assert(merged === 37L, "bin+merge rollup must equal the direct estimate")
 
-    val top = sqlOnly.sql("SELECT mg_topk(s, 50) AS t FROM sk").head()
+    val top = spark.sql("SELECT mg_topk(s, 50) AS t FROM sk").head()
       .getSeq[org.apache.spark.sql.Row](0)
     assert(top.nonEmpty && top.map(_.getLong(1)).max >= 27L,
       "37-cycle over 1000 rows: every item has ~27 occurrences")
 
-    val mgM = sqlOnly.sql(
+    val mgM = spark.sql(
       """SELECT mg_merge(b) AS t
         |FROM (SELECT mg_bin(s, 50) AS b FROM sk GROUP BY g)""".stripMargin).head()
       .getSeq[org.apache.spark.sql.Row](0)
     assert(mgM.nonEmpty)
 
-    val med = sqlOnly.sql("SELECT qsketch(v, 128, array(0.5d)) AS q FROM sk")
+    val med = spark.sql("SELECT qsketch(v, 128, array(0.5d)) AS q FROM sk")
       .head().getSeq[Double](0)
     assert(med.length === 1 && med.head >= 15.0 && med.head <= 21.0,
       s"median of 0..36 cycle should be ~18, got ${med.head}")
 
-    val qM = sqlOnly.sql(
+    val qM = spark.sql(
       """SELECT qsketch_merge(b, array(0.5d)) AS q
         |FROM (SELECT qsketch_bin(v, 128) AS b FROM sk GROUP BY g)""".stripMargin)
       .head().getSeq[Double](0)
     assert(qM.length === 1 && qM.head >= 15.0 && qM.head <= 21.0)
 
-    val cm = sqlOnly.sql("SELECT cm_sketch(s, 3, 64) AS m FROM sk").head()
+    val cm = spark.sql("SELECT cm_sketch(s, 3, 64) AS m FROM sk").head()
       .getSeq[scala.collection.Seq[Long]](0)
     assert(cm.length === 3 && cm.head.length === 64)
     assert(cm.head.sum === 1000L, "each CM row ingests every update once")
 
-    val cf = sqlOnly.sql(
+    val cf = spark.sql(
       """SELECT clamp_fold(d, -5L, 5L) AS t
         |FROM VALUES (10L), (-2L), (1L) AS v(d)""".stripMargin).head()
       .getStruct(0)
@@ -121,10 +92,10 @@ class SqlOnlyClientSpec extends SparkSpec {
   test("the optimizer rule rides along: the declarative dot fold becomes the native kernel") {
     // arrays must come from COLUMNS — literal arrays constant-fold to
     // the answer before any optimizer rule could see the fold shape
-    sqlOnly.range(1, 4)
+    spark.range(1, 4)
       .selectExpr("array(cast(id as double), 2d) AS a", "array(3d, 4d) AS b")
       .createOrReplaceTempView("fold_vecs")
-    val q = sqlOnly.sql(
+    val q = spark.sql(
       """SELECT aggregate(zip_with(a, b, (x, y) -> x * y),
         |                 0d, (acc, x) -> acc + x) AS d
         |FROM fold_vecs WHERE a[0] = 1d""".stripMargin)

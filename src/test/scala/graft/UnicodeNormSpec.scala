@@ -11,7 +11,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("nfc composes combining sequences to the precomposed form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val out = Seq(decomposed).toDF("t")
       .select(GraftFunctions.nfc_normalize(col("t"))).head.getString(0)
     assert(out == composed)
@@ -32,7 +31,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("nfc_is_normalized flags decomposed input without allocating") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rows = Seq(decomposed, composed, "ascii").toDF("t")
       .select(col("t"), GraftFunctions.nfc_is_normalized(col("t")).as("ok"))
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
@@ -41,7 +39,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("sql registration and codegen/interpreted parity") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(decomposed, composed, "mixed \u00e9 and e\u0301", "").toDF("t")
       .createOrReplaceTempView("nfc_tv")
     val viaSql = spark.sql(
@@ -56,7 +53,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("null input yields null") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq[Option[String]](None).toDF("t")
       .select(GraftFunctions.nfc_normalize(col("t")),
         GraftFunctions.nfc_is_normalized(col("t"))).head
@@ -65,7 +61,6 @@ class UnicodeNormSpec extends SparkSpec {
 
   test("non-string input is rejected at analysis time") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(1L).toDF("n")
     val ex = intercept[Exception] {
       df.select(GraftFunctions.nfc_normalize(col("n"))).head

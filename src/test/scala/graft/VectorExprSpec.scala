@@ -20,7 +20,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("native cosine is bit-identical to the aggregate/zip_with fold") {
-    GraftFunctions.register(spark)
     val df = vecs.select(
       Similarity.cosine(Similarity.toDoubleArr(col("a")),
         Similarity.toDoubleArr(col("b"))).as("fold"),
@@ -35,7 +34,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen result") {
-    GraftFunctions.register(spark)
     val expr = graft.plans.CosineSim(
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         Array(1.0, 2.0, 3.0), org.apache.spark.sql.types.ArrayType(
@@ -54,7 +52,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("null array yields null; mismatched lengths use the common prefix") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Array(1.0, 0.0)), Some(Array(1.0, 0.0, 9.0))),
@@ -66,7 +63,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("vec_dot with a null ELEMENT returns null, matching the fold") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // containsNull=true inputs: the checked kernel must return null
     // (the zip_with/aggregate fold it advertises parity with does),
@@ -87,7 +83,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("vec_cosine with a null ELEMENT returns null, never a 0.0-polluted similarity") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Seq[Option[Double]](Some(2.0), None), Seq[Option[Double]](Some(3.0), Some(4.0))),

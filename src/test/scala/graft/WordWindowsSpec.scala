@@ -58,9 +58,8 @@ class WordWindowsSpec extends SparkSpec {
     }
   }
 
-  test("SQL surface resolves after register()") {
+  test("SQL surface resolves through the session extensions") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val df = Seq((1L, Array("a", "b", "c"))).toDF("id", "w")
     df.createOrReplaceTempView("ww_probe")
     val got = spark.sql("SELECT word_windows(w, 2) AS v FROM ww_probe")
