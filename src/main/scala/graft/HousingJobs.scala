@@ -69,7 +69,8 @@ object HousingJobs {
     val b = full.select("name", "price", "city")
     val (unioned, obs) = StageMetrics.observed(a.union(b), "sqlRoundTrip")
     Sinks.jdbcAppend(unioned, url, outTable, dropCols = Seq.empty, props = props)
-    StageMetrics.observedRows(spark, obs).getOrElse(
-      throw new IllegalStateException(s"append to $outTable did not execute the pull"))
+    // the append returned, so it executed the pull: its observation is
+    // complete or in flight, and `get` waits for it
+    obs.get("rows").asInstanceOf[Long]
   }
 }

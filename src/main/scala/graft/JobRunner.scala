@@ -49,7 +49,9 @@ object JobRunner {
   /** Run every dataset in the config through its pipeline. Unknown
     * kinds and per-dataset failures are isolated (reference §4 error
     * isolation) and reported in the result. A dataset's count is the
-    * rows its load wrote, observed on that one execution. */
+    * rows its load wrote, observed on that one execution; a load that
+    * never executes the frame, or whose count the listener bus does not
+    * deliver in time, is reported as a `Left` saying which. */
   def run(
       spark: SparkSession,
       configJson: String,
@@ -67,7 +69,7 @@ object JobRunner {
               val (observed, obs) = StageMetrics.observed(df, s"load ${spec.name}")
               load(spec.name, observed)
               StageMetrics.observedRows(spark, obs)
-                .toRight(s"load of '${spec.name}' did not execute the frame")
+                .left.map(why => s"load of '${spec.name}': $why")
           }
         } catch { case e: Exception => Left(e.getMessage) }
       spec.name -> outcome

@@ -22,10 +22,16 @@ object StageMetrics {
   }
 
   /** Rows the observed frame produced, read after the action that was
-    * meant to execute it has returned; `None` if no action did. Never
-    * blocks on an observation that cannot complete. */
-  def observedRows(spark: SparkSession, obs: Observation): Option[Long] = {
-    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-    obs.future.value.flatMap(_.toOption).map(_.getAs[Long]("rows"))
+    * meant to execute it has returned. Never blocks on an observation
+    * that cannot complete: `Left` if no action executed the frame, and
+    * a `Left` of its own if the listener bus did not drain in time (the
+    * frame may have run, but its count was not delivered). */
+  def observedRows(spark: SparkSession, obs: Observation): Either[String, Long] = {
+    val drained = org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    obs.future.value match {
+      case Some(r) => r.toEither.left.map(_.toString).map(_.getAs[Long]("rows"))
+      case None if drained => Left("the frame was not executed")
+      case None => Left("row count not delivered: the listener bus did not drain in time")
+    }
   }
 }

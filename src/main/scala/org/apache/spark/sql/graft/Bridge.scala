@@ -29,12 +29,15 @@ object Bridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
-  /** Block until every listener event posted so far is delivered.
-    * `Observation` results arrive through a QueryExecutionListener on
-    * the asynchronous bus, so after an action returns this makes
-    * "was the observed frame executed?" a deterministic question. */
-  def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
+  /** Block until every listener event posted so far is delivered;
+    * false if some listener queue did not drain within the bus's
+    * default timeout. `Observation` results arrive through a
+    * QueryExecutionListener on the asynchronous bus, so after an
+    * action returns a drained bus makes "was the observed frame
+    * executed?" a deterministic question. */
+  def drainListenerBus(spark: SparkSession): Boolean =
+    try { spark.sparkContext.listenerBus.waitUntilEmpty(); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 
   /** Catalyst Expression behind a (possibly unresolved) Column. */
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =

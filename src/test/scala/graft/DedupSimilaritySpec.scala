@@ -89,13 +89,24 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("cosine: parallel vectors → 1.0, orthogonal → 0.0") {
     import spark.implicits._
-    val df = Seq((Array(1f, 0f, 2f), Array(2f, 0f, 4f), Array(0f, 3f, 0f)))
+    // an RDD source, not a local Seq: the optimizer evaluates a projection
+    // over a LocalRelation before FoldToNativeVectorOps could see it
+    val df = spark.sparkContext.parallelize(
+      Seq((Array(1f, 0f, 2f), Array(2f, 0f, 4f), Array(0f, 3f, 0f))), 1)
       .toDF("a", "b", "c")
-    val r = df.select(
+    val cos = df.select(
       Similarity.cosine(Similarity.toDoubleArr(col("a")), Similarity.toDoubleArr(col("b"))),
-      Similarity.cosine(Similarity.toDoubleArr(col("a")), Similarity.toDoubleArr(col("c")))).head()
-    assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
-    assert(math.abs(r.getDouble(1)) < 1e-12)
+      Similarity.cosine(Similarity.toDoubleArr(col("a")), Similarity.toDoubleArr(col("c"))))
+    // both the fold itself and the native kernel the session rewrites it to
+    val fold = withoutFoldRewrite {
+      assert(!plansDotProduct(cos))
+      cos.head()
+    }
+    assert(plansDotProduct(cos))
+    for (r <- Seq(fold, cos.head())) {
+      assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
+      assert(math.abs(r.getDouble(1)) < 1e-12)
+    }
   }
 
   test("brute-force top-k ranks the nearest target first") {

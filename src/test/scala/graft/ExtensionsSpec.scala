@@ -25,17 +25,25 @@ class ExtensionsSpec extends SparkSpec {
   test("FoldToNativeVectorOps rewrites the dot-product fold to the native kernel") {
     import spark.implicits._
     import graft.plans.{DotProduct, FoldToNativeVectorOps}
-    val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)))
+    // an RDD source, not a local Seq: the optimizer evaluates a projection
+    // over a LocalRelation before FoldToNativeVectorOps could see it
+    val df = spark.sparkContext.parallelize(Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))), 1)
       .toDF("a", "b")
     val folded = df.select(
       graft.operators.Similarity.dot($"a", $"b").as("d"))
     val rewritten = FoldToNativeVectorOps(folded.queryExecution.analyzed)
     assert(rewritten.expressions.exists(_.exists(_.isInstanceOf[DotProduct])),
       s"fold not rewritten:\n$rewritten")
-    // value parity: fold, native SQL function, and expectation agree
+    // value parity: fold, rewritten fold, native SQL function, and
+    // expectation agree
+    val fold = withoutFoldRewrite {
+      assert(!plansDotProduct(folded), "the reference fold must not run the native kernel")
+      folded.head().getDouble(0)
+    }
+    assert(plansDotProduct(folded), "the session's optimizer did not rewrite the fold")
     df.createOrReplaceTempView("vecs")
     val native = spark.sql("SELECT vec_dot(a, b) AS d FROM vecs").head().getDouble(0)
-    assert(folded.head().getDouble(0) == 32.0 && native == 32.0)
+    assert(fold == 32.0 && folded.head().getDouble(0) == 32.0 && native == 32.0)
     // a non-dot fold must NOT be rewritten (sum of squares)
     val other = df.select(org.apache.spark.sql.functions.aggregate(
       org.apache.spark.sql.functions.zip_with($"a", $"b", (x, y) => x * y),
@@ -46,14 +54,20 @@ class ExtensionsSpec extends SparkSpec {
 
   test("native vec_dot matches fold null semantics on mismatched lengths") {
     import spark.implicits._
-    val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0)))
+    // an RDD source, not a local Seq: the optimizer evaluates a projection
+    // over a LocalRelation before FoldToNativeVectorOps could see it
+    val df = spark.sparkContext.parallelize(Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0))), 1)
       .toDF("a", "b")
-    val folded = df.select(
-      graft.operators.Similarity.dot($"a", $"b").as("d")).head()
+    val dot = df.select(graft.operators.Similarity.dot($"a", $"b").as("d"))
+    val folded = withoutFoldRewrite {
+      assert(!plansDotProduct(dot), "the reference fold must not run the native kernel")
+      dot.head()
+    }
     df.createOrReplaceTempView("vecs_mismatch")
     val native = spark.sql("SELECT vec_dot(a, b) AS d FROM vecs_mismatch").head()
     assert(folded.isNullAt(0), "zip_with pads with null, poisoning the fold")
     assert(native.isNullAt(0), "native must mirror the fold's null")
+    assert(dot.head().isNullAt(0), "the rewritten fold must keep the fold's null")
   }
 
   // ---- one row per native function: Column helper vs SQL name ------

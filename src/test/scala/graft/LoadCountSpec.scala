@@ -22,7 +22,7 @@ class LoadCountSpec extends SparkSpec {
     spark.sparkContext.setJobGroup(group, "load count")
     try {
       val r = body
-      Bridge.drainListenerBus(spark)
+      assert(Bridge.drainListenerBus(spark), "listener bus did not drain")
       (r, n.get)
     } finally {
       spark.sparkContext.clearJobGroup()

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Similarity
 import graft.plans.GraftFunctions
+import org.apache.spark.sql.DataFrame
 
 /** Native CosineSim must be bit-identical to the Column-API fold it
   * replaces (the oracle parity of every similarity query depends on
@@ -9,27 +10,53 @@ import graft.plans.GraftFunctions
 class VectorExprSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
+  /** An RDD source, not a local Seq: the optimizer evaluates a
+    * projection over a LocalRelation before FoldToNativeVectorOps
+    * could see it. */
   private def vecs = {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
-    (1 to 50).map { i =>
+    spark.sparkContext.parallelize((1 to 50).map { i =>
       (i.toLong,
         Array.fill(64)(rnd.nextFloat() * 2 - 1),
         Array.fill(64)(rnd.nextFloat() * 2 - 1))
-    }.toDF("id", "a", "b")
+    }, 2).toDF("id", "a", "b")
+  }
+
+  /** Gaussian doubles. The float grid of [[vecs]] sums exactly in any
+    * order; these products round, so only a left-to-right
+    * accumulation reproduces the fold's bits. */
+  private def gaussians = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    spark.sparkContext.parallelize((1 to 50).map { i =>
+      (i.toLong, Array.fill(64)(rnd.nextGaussian()), Array.fill(64)(rnd.nextGaussian()))
+    }, 2).toDF("id", "a", "b")
   }
 
   test("native cosine is bit-identical to the aggregate/zip_with fold") {
-    val df = vecs.select(
-      Similarity.cosine(Similarity.toDoubleArr(col("a")),
-        Similarity.toDoubleArr(col("b"))).as("fold"),
-      GraftFunctions.vec_cosine(Similarity.toDoubleArr(col("a")),
-        Similarity.toDoubleArr(col("b"))).as("native"))
-    val rows = df.collect()
-    rows.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)),
-        s"fold=${r.getDouble(0)} native=${r.getDouble(1)}")
+    val a = Similarity.toDoubleArr(col("a"))
+    val b = Similarity.toDoubleArr(col("b"))
+    for ((input, in) <- Seq[(String, () => DataFrame)]("floats" -> (() => vecs),
+        "gaussians" -> (() => gaussians))) {
+      // defs: each use plans a fresh Dataset under the confs in force
+      def fold = in().select(col("id"), Similarity.cosine(a, b).as("c"))
+      def native = in().select(col("id"), GraftFunctions.vec_cosine(a, b).as("c"))
+      def byId(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val reference = withoutFoldRewrite {
+        assert(!plansDotProduct(fold), "the reference fold must not run the native kernel")
+        byId(fold)
+      }
+      // the fold as the session plans it, through FoldToNativeVectorOps
+      assert(plansDotProduct(fold))
+      val rewritten = byId(fold)
+      val nat = byId(native)
+      assert(reference.size == 50)
+      reference.foreach { case (id, f) =>
+        for ((label, v) <- Seq("native" -> nat(id), "rewritten fold" -> rewritten(id)))
+          assert(java.lang.Double.doubleToLongBits(f) == java.lang.Double.doubleToLongBits(v),
+            s"$input id=$id fold=$f $label=$v")
+      }
     }
   }
 
