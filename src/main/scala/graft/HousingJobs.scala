@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *  1. `scrapeDay`   — trulia_scrape.py main(): pages → rows → clean →
   *                     partitioned daily sink (idempotent re-run).
   *  2. `analyze`     — trulia_csv_to_nlp.ipynb: daily CSV union →
-  *                     amenity flags → one-hot → ridge CV model.
+  *                     amenity flags → one-hot → ridge CV model, fit
+  *                     on the featurized frame materialized once.
   *  3. `sqlRoundTrip`— load_save_sql.ipynb: JDBC pull → union → append.
   */
 object HousingJobs {
@@ -30,12 +31,12 @@ object HousingJobs {
     cleaned
   }
 
-  /** Lifecycle 2: multi-day analysis — union the daily store, NLP
-    * featurization, one-hot zips, ridge price model with 5-fold CV.
-    * Returns (featurized frame, heldout R², coefficient table). */
-  def analyze(spark: SparkSession, dailyDir: String,
-      alphas: Seq[Double] = Seq(0.1, 1.0, 10.0))
-      : (DataFrame, Double, Seq[(String, Double)]) = {
+  /** Lifecycle 2's featurization: union the daily store, flag the
+    * amenity keywords in `details`, one-hot the zips (drop-first), drop
+    * rows without price or sqft, and cast the features and `price` to
+    * double. Returns the lazy typed frame and its feature columns. The
+    * zip list is collected here, which scans the store once. */
+  def features(spark: SparkSession, dailyDir: String): (DataFrame, Seq[String]) = {
     val corpus = spark.read.parquet(dailyDir)
     val flagged = Cleaning.amenityFlags(
       corpus.withColumn("details", coalesce(col("details"), lit(""))), "details")
@@ -50,13 +51,28 @@ object HousingJobs {
     val featureCols = Seq("sqft", "bed", "bath") ++
       Cleaning.amenityKeywords ++
       zips.drop(1).map(z => s"zipcode_$z")
-    val doubled = featureCols.foldLeft(featurized)((d, c) =>
-      d.withColumn(c, col(c).cast("double")))
-      .withColumn("price", col("price").cast("double"))
-    val (train, test) = PriceModel.split(doubled)
-    val model = PriceModel.crossValidate(train, featureCols, alphas)
-    val r2 = PriceModel.r2(model, test)
-    (featurized, r2, PriceModel.coefficients(model, featureCols))
+    val typed = (featureCols :+ "price").map(c => c -> col(c).cast("double")).toMap
+    (featurized.withColumns(typed), featureCols)
+  }
+
+  /** Lifecycle 2: multi-day analysis — [[features]], then a ridge price
+    * model with 5-fold CV. The typed frame is materialized once (a
+    * local checkpoint on a local master, see `Fx.materialize`): the
+    * split, every CV fold's train and validation pass, the refit and R²
+    * read its blocks instead of re-running the store scan and the
+    * featurization, which the CV's RDD path would otherwise do for each
+    * of them. The blocks are freed before returning. Returns (the lazy
+    * featurized frame, held-out R², coefficient table). */
+  def analyze(spark: SparkSession, dailyDir: String,
+      alphas: Seq[Double] = Seq(0.1, 1.0, 10.0))
+      : (DataFrame, Double, Seq[(String, Double)]) = {
+    val (featurized, featureCols) = features(spark, dailyDir)
+    val typed = Fx.materialize(featurized)
+    try {
+      val (train, test) = PriceModel.split(typed)
+      val model = PriceModel.crossValidate(train, featureCols, alphas)
+      (featurized, PriceModel.r2(model, test), PriceModel.coefficients(model, featureCols))
+    } finally Fx.free(typed)
   }
 
   /** Lifecycle 3: SQL round trip — pull two projections, union, append

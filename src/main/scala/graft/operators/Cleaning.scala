@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
+
 /** Listing-cleaning operator library — Spark-native re-expression of the
   * reference's pandas cleaning pipeline (trulia_scrape.py:156-180) and
   * NLP featurization (trulia_csv_to_nlp.ipynb cells 13-18).
@@ -133,11 +135,12 @@ object Cleaning {
 
   /** F12: static one-hot with drop-first (pandas get_dummies parity —
     * sklearn/pandas drop the FIRST sorted category; Spark's
-    * OneHotEncoder drops the LAST, so parity needs this static form). */
+    * OneHotEncoder drops the LAST, so parity needs this static form).
+    * One projection; the `ListMap` keeps the flags in value order, and
+    * values that give the same flag name keep the first one's place
+    * with the last one's test. */
   def oneHot(df: DataFrame, column: String, sortedValues: Seq[String],
       prefix: String): DataFrame =
-    sortedValues.drop(1).foldLeft(df) { (d, v) =>
-      val name = s"${prefix}_${v.toLowerCase.replace(' ', '_')}"
-      d.withColumn(name, when(col(column) === v, 1).otherwise(0))
-    }
+    df.withColumns(ListMap(sortedValues.drop(1).map(v =>
+      s"${prefix}_${v.toLowerCase.replace(' ', '_')}" -> when(col(column) === v, 1).otherwise(0)): _*))
 }

@@ -124,4 +124,14 @@ class CleaningSpec extends SparkSpec {
     assert(rows.map(_.getAs[Int]("region_asia")).toSeq == Seq(0, 1, 0))
     assert(rows.map(_.getAs[Int]("region_europe")).toSeq == Seq(0, 0, 1))
   }
+
+  test("one-hot: values that name the same flag keep the last value's flag in the first one's place") {
+    import spark.implicits._
+    val df = Seq("AFRICA", "ASIA", "asia", "EUROPE").toDF("r_name")
+    val out = Cleaning.oneHot(df, "r_name",
+      Seq("AFRICA", "ASIA", "asia", "EUROPE"), "region")
+    assert(out.columns.toSeq == Seq("r_name", "region_asia", "region_europe"))
+    val rows = out.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(rows == Map("AFRICA" -> 0, "ASIA" -> 0, "asia" -> 1, "EUROPE" -> 0))
+  }
 }

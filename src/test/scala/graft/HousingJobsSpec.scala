@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import graft.ml.PriceModel
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.graft.Bridge
+
 /** Full-lifecycle integration: the reference's production flow run
   * end-to-end through HousingJobs on golden-shaped data.
   */
@@ -44,11 +48,34 @@ class HousingJobsSpec extends SparkSpec {
     HousingJobs.scrapeDay(spark, pages, store, "2020-01-08")
     assert(spark.read.parquet(store).count() == 30)
 
-    val (featurized, r2, coefs) = HousingJobs.analyze(spark, store)
+    // every completed stage's RDD lineage, and the persisted RDDs, around analyze
+    val sc = spark.sparkContext
+    val scanStages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scanStages.incrementAndGet()
+    }
+    assert(Bridge.drainListenerBus(spark))
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val (featurized, r2, coefs) =
+      try HousingJobs.analyze(spark, store)
+      finally { assert(Bridge.drainListenerBus(spark)); sc.removeSparkListener(listener) }
     assert(featurized.columns.contains("pool"))
     assert(featurized.columns.contains("zipcode_78745")) // drop-first kept later zip
     assert(r2 > 0.9, s"strong linear signal should fit, r2=$r2")
     assert(coefs.nonEmpty)
+    // the store is scanned for the zip list and for the one materialize;
+    // the split, CV folds, refit and R² read the materialized blocks
+    assert(scanStages.get <= 2, s"${scanStages.get} stages scanned the store")
+    assert(sc.getPersistentRDDs.keySet == persistedBefore, "materialized blocks not freed")
+
+    // the materialize changes no number: the same model fit on the lazy frame
+    val (lazyFeatures, featureCols) = HousingJobs.features(spark, store)
+    val (train, test) = PriceModel.split(lazyFeatures)
+    val model = PriceModel.crossValidate(train, featureCols, Seq(0.1, 1.0, 10.0))
+    assert(r2 == PriceModel.r2(model, test))
+    assert(coefs == PriceModel.coefficients(model, featureCols))
   }
 
   test("sqlRoundTrip appends the unioned pull (Derby)") {
