@@ -10,12 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** The one session factory. Verify, Bench, ExplainAudit, ScaleSmoke
-    * and the test suite all build their session here, so correctness
-    * runs, benchmarks, plan audits and tests plan under the same confs
-    * and the same [[graft.plans.GraftExtensions]] (native SQL names and
-    * the FoldToNativeVectorOps rule). `cores` is the only thing the
-    * callers differ in. */
+  /** The one session factory. Verify, Bench, ScaleSmoke, the test
+    * suite and its PlanCensus report all build their session here, so
+    * correctness runs, benchmarks, plan audits and tests plan under the
+    * same confs and the same [[graft.plans.GraftExtensions]] (native SQL
+    * names and the FoldToNativeVectorOps rule). `cores` is the only
+    * thing the callers differ in. */
   def session(cores: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

@@ -5,7 +5,9 @@ import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.regression.LinearRegression
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit, pmod, udf, xxhash64}
+import org.apache.spark.sql.types.NumericType
 
 /** Ridge price model — MLlib re-expression of the reference's sklearn
   * pipeline (trulia_csv_to_nlp.ipynb cells 22-31, SURVEY §2.10):
@@ -19,10 +21,25 @@ import org.apache.spark.sql.DataFrame
   */
 object PriceModel {
 
+  /** A seeded hash of each row's numeric columns (features, label) in
+    * [0, n). `randomSplit` and CrossValidator's own folds sample per
+    * partition, so the same rows packed differently split differently;
+    * text columns such as `url` (the page's path) vary between runs.
+    * The identity UDF is marked nondeterministic so the optimizer infers
+    * no constraints from a filter on the bucket: over an unmaterialized
+    * frame of ~100 derived columns that inference ran for minutes. */
+  private def rowBucket(df: DataFrame, seed: Long, n: Int): Column = {
+    val numeric = df.schema.fields.toSeq.collect {
+      case f if f.dataType.isInstanceOf[NumericType] => col(s"`${f.name}`")
+    }
+    udf((b: Long) => b).asNondeterministic()(
+      pmod(xxhash64(lit(seed) +: lit(n) +: numeric: _*), lit(n.toLong)))
+  }
+
   /** M1: the reference's 75/25 split, seeded (sklearn default + seed 7). */
   def split(df: DataFrame, seed: Long = 7L): (DataFrame, DataFrame) = {
-    val Array(train, test) = df.randomSplit(Array(0.75, 0.25), seed)
-    (train, test)
+    val bucket = rowBucket(df, seed, 100)
+    (df.filter(bucket < 75), df.filter(bucket >= 75))
   }
 
   /** M2-M4: assembler → scaler(withMean) → ridge. */
@@ -53,9 +70,9 @@ object PriceModel {
         .setLabelCol(labelCol).setMetricName("r2"))
       .setEstimatorParamMaps(grid)
       .setNumFolds(folds)
-      .setSeed(seed)
+      .setFoldCol("cv_fold")
       .setParallelism(4)
-      .fit(train)
+      .fit(train.withColumn("cv_fold", rowBucket(train, seed, folds).cast("int")))
   }
 
   /** M6-M7: R² on held-out data. */

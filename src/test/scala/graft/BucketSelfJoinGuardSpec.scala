@@ -1,10 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, EqualNullSafe, EqualTo, ExprId, Expression, Hour, Month, ParseToDate, TruncDate, TruncTimestamp, Year}
-import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, TimestampType}
 
 /** Mechanical guard against the quadratic-block join shape the
   * round-10 co-activity builder fixed (q109/q353/q360): a SELF
@@ -24,9 +20,10 @@ import org.apache.spark.sql.types.{DateType, TimestampType}
   * Distinct/dedup on MORE than the keys does NOT bound (q109's
   * original `distinct (hr, user_id)` was precisely the trap).
   *
-  * Like WindowStragglerGuardSpec, the sweep walks every registered
-  * query's optimized plan and fails the build when anyone
-  * reintroduces the raw shape. Limitation, stated: a
+  * Like WindowStragglerGuardSpec, the sweep reads the rule's verdict on
+  * every registered query's optimized plan from [[PlanCensus]] (where
+  * the rule lives) and fails the build when anyone reintroduces the
+  * raw shape. Limitation, stated: a
   * `Fx.materialize` boundary truncates lineage (LogicalRDD), so
   * joins INSIDE an already-materialized builder are checked where
   * the builder is used un-materialized (the planted cases below),
@@ -35,136 +32,36 @@ import org.apache.spark.sql.types.{DateType, TimestampType}
 class BucketSelfJoinGuardSpec extends SparkSpec {
   import spark.implicits._
 
-  private val sf = "/root/testdata/sf0.001"
+  private def hourlyActive = Tables.events(spark, PlanCensus.sf)
+    .select(date_trunc("hour", $"ts").as("hr"), $"user_id").distinct()
 
-  /** exprId → defining child expression, from every Project/Aggregate
-    * alias in the tree. */
-  private def aliasMap(p: LogicalPlan): Map[ExprId, Expression] =
-    p.collect {
-      case pr: Project => pr.projectList
-      case ag: Aggregate => ag.aggregateExpressions
-      case w: Window => w.windowExpressions
-    }.flatten.collect { case a: Alias => a.exprId -> a.child }.toMap
-
-  /** Expand an expression through alias definitions to fixpoint,
-    * collecting every exprId encountered on the way (the key's
-    * lineage closure). */
-  private def expand(e: Expression, defs: Map[ExprId, Expression],
-      seen: scala.collection.mutable.Set[ExprId], depth: Int = 0): Expression =
-    if (depth > 20) e
-    else e.transformUp {
-      case ar: AttributeReference if defs.contains(ar.exprId) && !seen(ar.exprId) =>
-        seen += ar.exprId
-        expand(defs(ar.exprId), defs, seen, depth + 1)
-      case ar: AttributeReference =>
-        seen += ar.exprId; ar
-    }
-
-  /** Is the (expanded) key expression a time-bucket — derived through
-    * a truncation that maps unboundedly many rows onto a fixed,
-    * volume-independent domain? */
-  private def isTimeBucket(e: Expression): Boolean = e.exists {
-    case _: TruncTimestamp | _: TruncDate | _: ParseToDate => true
-    case _: Hour | _: Month | _: Year => true
-    case c: Cast => c.dataType == DateType &&
-      c.child.dataType.isInstanceOf[TimestampType.type]
-    case _ => false
-  }
-
-  /** Leaf identities of a subtree — overlapping identities between the
-    * two join sides mean a self-join over the same base data. */
-  private def leafIds(p: LogicalPlan): Set[String] = p.collect {
-    case l: LogicalRelation => l.relation.toString
-    case l: LeafNode if l.getClass.getSimpleName.contains("DataSourceV2") =>
-      l.toString.take(120)
-    case r: Range => s"range(${r.start},${r.end},${r.step})"
-  }.toSet
-
-  /** True when `plan` bounds rows-per-key for join keys whose lineage
-    * closure is `keyIds`. */
-  private def bounded(plan: LogicalPlan, keyIds: Set[ExprId]): Boolean = plan match {
-    case _: graft.plans.TopKPerGroupNode => true
-    case _: GlobalLimit => true
-    case _: LocalRelation | _: OneRowRelation => true
-    case a: Aggregate =>
-      val groupOut: Seq[Option[ExprId]] = a.groupingExpressions.map {
-        case ar: AttributeReference => Some(ar.exprId)
-        case ge => a.aggregateExpressions.collectFirst {
-          case al: Alias if al.child.semanticEquals(ge) => al.exprId
-        }
-      }
-      // every grouping column is a join key ⇒ ≤ 1 row per key value
-      (groupOut.nonEmpty && groupOut.forall(_.exists(keyIds.contains))) ||
-        a.children.forall(bounded(_, keyIds)) // or already bounded below
-    case p if p.children.nonEmpty => p.children.forall(bounded(_, keyIds))
-    case _ => false // raw scan (file relation, LogicalRDD, v2 table)
-  }
-
-  /** All offending joins in one plan, described. */
-  private def offenders(plan: LogicalPlan): Seq[String] = plan.collect {
-    case j @ Join(left, right, _, Some(cond), _) =>
-      val conjuncts = cond.collect { case e: EqualTo => e: Expression
-                                     case e: EqualNullSafe => e }
-      val pairs = conjuncts.collect {
-        case EqualTo(a: AttributeReference, b: AttributeReference) => (a, b)
-        case EqualNullSafe(a: AttributeReference, b: AttributeReference) => (a, b)
-      }
-      // only joins whose EVERY equi-key is attr=attr and time-bucket
-      // shaped on both sides are the hazard class
-      if (pairs.isEmpty || pairs.size != conjuncts.size) Nil
-      else {
-        val lDefs = aliasMap(left)
-        val rDefs = aliasMap(right)
-        val lSeen = scala.collection.mutable.Set.empty[ExprId]
-        val rSeen = scala.collection.mutable.Set.empty[ExprId]
-        val allBuckets = pairs.forall { case (a, b) =>
-          val (la, rb) =
-            if (left.outputSet.exists(_.exprId == a.exprId)) (a, b) else (b, a)
-          isTimeBucket(expand(la, lDefs, lSeen)) &&
-            isTimeBucket(expand(rb, rDefs, rSeen))
-        }
-        val selfJoin = (leafIds(left) intersect leafIds(right)).nonEmpty
-        if (allBuckets && selfJoin &&
-            !bounded(left, lSeen.toSet) && !bounded(right, rSeen.toSet))
-          Seq(s"join on ${pairs.map(_._1.name).mkString(",")}")
-        else Nil
-      }
-  }.flatten
+  private def flagged(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    PlanCensus.bucketSelfJoins(df.queryExecution.optimizedPlan)
 
   test("planted uncapped hour self-join is flagged") {
-    val active = Tables.events(spark, sf)
-      .select(date_trunc("hour", $"ts").as("hr"), $"user_id").distinct()
+    val active = hourlyActive
     val bad = active.as("x").join(active.as("y"), Seq("hr"))
       .filter($"x.user_id" < $"y.user_id")
       .select($"x.user_id".as("a"), $"y.user_id".as("b"))
-    val found = offenders(bad.queryExecution.optimizedPlan)
-    assert(found.nonEmpty, "guard missed the uncapped per-hour self-join")
+    assert(flagged(bad).nonEmpty, "guard missed the uncapped per-hour self-join")
   }
 
   test("the capped co-activity builder passes (TopKPerGroup bounds the sides)") {
-    val active = Tables.events(spark, sf)
-      .select(date_trunc("hour", $"ts").as("hr"), $"user_id").distinct()
-    val good = graft.operators.GraphQueries.coactivityEdgesFrom(active, 16)
-    assert(offenders(good.queryExecution.optimizedPlan).isEmpty,
-      "guard flagged the capped builder")
+    val good = graft.operators.GraphQueries.coactivityEdgesFrom(hourlyActive, 16)
+    assert(flagged(good).isEmpty, "guard flagged the capped builder")
   }
 
   test("bucket-keyed joins of per-bucket AGGREGATES pass (≤ 1 row per key)") {
-    val daily = Tables.events(spark, sf)
+    val daily = Tables.events(spark, PlanCensus.sf)
       .groupBy(to_date($"ts").as("day"))
       .agg(count(lit(1)).as("n"))
     val joined = daily.as("a").join(daily.as("b"), Seq("day"))
       .select($"day", $"a.n".as("x"), $"b.n".as("y"))
-    assert(offenders(joined.queryExecution.optimizedPlan).isEmpty,
-      "guard flagged a bounded daily-rollup self-join")
+    assert(flagged(joined).isEmpty, "guard flagged a bounded daily-rollup self-join")
   }
 
   test("no registered query contains an unbounded bucket-keyed self-join") {
-    val skip = graft.operators.StreamingQueries.all.map(_.name).toSet
-    val hits = SparkEntry.registry.filterNot(q => skip(q.name)).flatMap { q =>
-      offenders(q.fn(spark, sf).queryExecution.optimizedPlan)
-        .map(o => s"${q.name}: $o")
-    }
+    val hits = PlanCensus.entries.flatMap(e => e.bucketSelfJoins.map(o => s"${e.name}: $o"))
     assert(hits.isEmpty,
       s"uncapped bucket-keyed self-join (use GraphQueries.coactivityEdges' " +
         s"bottom-k-by-hash cap or pre-aggregate): ${hits.mkString("; ")}")

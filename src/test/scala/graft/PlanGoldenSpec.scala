@@ -7,13 +7,11 @@ package graft
   * visible regression — a broadcast degrading to a sort-merge join, a
   * new shuffle appearing in a reworked operator — fails HERE instead
   * of surfacing as a mystery slowdown three rounds later. Counts are
-  * derived from the pre-execution plan (deterministic for fixed
-  * config/data); streaming queries have no executedPlan before start
-  * and are excluded (their guards live in the streaming specs).
+  * derived from [[PlanCensus]]'s pre-execution plans (deterministic for
+  * fixed config/data); streaming queries have no executedPlan before
+  * start and are excluded (their guards live in the streaming specs).
   */
 class PlanGoldenSpec extends SparkSpec {
-
-  private val sfDir = "/root/testdata/sf0.001"
 
   private val golden: Map[String, (Int, Int, Int)] = Map(
     "q01_pricing_summary" -> ((0, 0, 1)),
@@ -52,7 +50,7 @@ class PlanGoldenSpec extends SparkSpec {
     "q197_interval_overlap" -> ((1, 0, 1)),
     "q200_audience_overlap" -> ((0, 0, 5)),
     // re-signed round 19: ONE session_window aggregation via
-    // IntervalJoin.selfOverlap (materialized cell relation self-join)
+    // IntervalJoin.selfOverlapOrdered (materialized cell relation self-join)
     // instead of building the identical session relation per join side
     // — two of the three hash exchanges (the duplicate session agg +
     // its cell shuffle) are gone
@@ -101,17 +99,15 @@ class PlanGoldenSpec extends SparkSpec {
   )
 
   test("bench-query plan shapes match the signed-off golden counts") {
-    val skip = operators.StreamingQueries.all.map(_.name).toSet
-    val defs = SparkEntry.benchQueries.filterNot(q => skip(q.name))
-    assert(defs.map(_.name).toSet === golden.keySet,
-      "bench set changed - regenerate the golden map (ExplainAudit)")
-    val bad = defs.flatMap { q =>
-      val p = q.fn(spark, sfDir).queryExecution.executedPlan.toString
-      def c(needle: String): Int = needle.r.findAllIn(p).length
-      val got = (c("BroadcastHashJoin"), c("SortMergeJoin"),
-        c("Exchange hashpartitioning"))
-      if (got == golden(q.name)) None
-      else Some(s"${q.name}: got $got, golden ${golden(q.name)}")
+    val names = SparkEntry.benchQueries.map(_.name).filterNot(PlanCensus.streaming)
+    assert(names.toSet === golden.keySet,
+      "bench set changed - regenerate the golden map (PlanCensus report)")
+    val bad = names.flatMap { name =>
+      val e = PlanCensus(name)
+      val got = (e.count("BroadcastHashJoin"), e.count("SortMergeJoin"),
+        e.count("Exchange hashpartitioning"))
+      if (got == golden(name)) None
+      else Some(s"$name: got $got, golden ${golden(name)}")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
@@ -124,9 +120,8 @@ class PlanGoldenSpec extends SparkSpec {
     // cleared the trio's reported drift as driver-environment load:
     // identical plans, statistically identical idle times.
     val ann = Seq("q60_cosine_topk", "q62_ann_ivf_topk", "q190_ann_eval")
-    val byName = SparkEntry.benchQueries.map(q => q.name -> q).toMap
     ann.foreach { name =>
-      val p = byName(name).fn(spark, sfDir).queryExecution.executedPlan.toString
+      val p = PlanCensus(name).executedPlan
       assert(p.contains("TopKPerGroup"),
         s"$name lost the bounded-heap top-k operator:\n$p")
       assert(!p.contains("CartesianProduct"), s"$name grew a cartesian")

@@ -140,16 +140,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("plan guard sweep: no CartesianProduct in any registered query") {
-    // Streaming queries execute on build (memory-sink round trip) and
-    // return a plain table scan — nothing to guard there.
-    val skip = graft.operators.StreamingQueries.all.map(_.name).toSet
-    val offenders = SparkEntry.registry.filterNot(q => skip(q.name)).flatMap { q =>
-      val p = plan(q.fn(spark, sf))
-      // BroadcastNestedLoopJoin (broadcast-small-side crossJoin designs,
-      // e.g. q60's broadcast query set) is intended; an unpartitioned
-      // CartesianProduct never is.
-      if (p.contains("CartesianProduct")) Some(q.name) else None
-    }
+    // BroadcastNestedLoopJoin (broadcast-small-side crossJoin designs,
+    // e.g. q60's broadcast query set) is intended; an unpartitioned
+    // CartesianProduct never is. The census leaves out streaming queries.
+    val offenders = PlanCensus.entries.filter(_.executedPlan.contains("CartesianProduct"))
+      .map(_.name)
     assert(offenders.isEmpty, s"cartesian product in: ${offenders.mkString(", ")}")
   }
 

@@ -34,4 +34,22 @@ class PriceModelSpec extends SparkSpec {
     assert(coefs.size == 4)
     assert(coefs("sqft") > 0 && coefs("bed") > 0)
   }
+
+  test("the 75/25 split and the CV folds depend on the rows, not on how they are partitioned") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val df = (1 to 500).map(i => (i.toDouble, i * 2.0 + rnd.nextGaussian() * 40))
+      .toDF("sqft", "price")
+    val Seq(one, seven) = Seq(df.coalesce(1), df.repartition(7)).map(PriceModel.split(_))
+    val (train, test) = (one._1.collect().toSet, one._2.collect().toSet)
+    assert((seven._1.collect().toSet, seven._2.collect().toSet) === ((train, test)))
+    assert(train.size + test.size === 500 && train.intersect(test).isEmpty)
+    assert(train.size > 330 && train.size < 420, s"train ${train.size} of 500")
+    // same folds ⇒ the same CV scores, up to summation order
+    val Seq(cv1, cv7) = Seq(one, seven).map(s => PriceModel.crossValidate(
+      s._1, Seq("sqft"), alphas = Seq(0.1, 10.0)).avgMetrics.toSeq)
+    cv7.zip(cv1).foreach { case (a, b) =>
+      assert(math.abs(a - b) < 1e-9, s"CV scores differ by partitioning: $a vs $b")
+    }
+  }
 }

@@ -1,12 +1,11 @@
 package graft
 
-/** CI form of the round-16 scan audit (r16 verdict #2): ExplainAudit
-  * prints `scans=` per query, but nothing FAILED when a new query
-  * re-read a table N× needlessly — the q552-first-draft class (its
-  * per-rung UNION scanned `documents` four times where one pass
-  * suffices) could recur silently. This sweep compiles every
-  * registered query's physical plan and enforces a per-query planned
-  * parquet-scan budget:
+/** CI gate of the round-16 scan audit (r16 verdict #2): without it,
+  * nothing FAILED when a new query re-read a table N× needlessly — the
+  * q552-first-draft class (its per-rung UNION scanned `documents` four
+  * times where one pass suffices) could recur silently. This sweep
+  * reads every registered query's planned parquet scans from
+  * [[PlanCensus]] and enforces a per-query budget:
   *
   *   - queries listed in src/test/resources/scan_budgets.tsv (the
   *     inherent multi-scanners, seeded from the round-17 audit — e.g.
@@ -19,12 +18,11 @@ package graft
   *     for multi-consumer intermediates.
   *
   * Raising a budget (or adding a row) is a deliberate, reviewed edit
-  * of the TSV, regenerable via
-  * `runMain graft.ExplainAudit /root/testdata/sf0.001 budgets`.
+  * of the TSV. A failing sweep prints the complete regenerated TSV
+  * body (every query whose scans exceed its tables) below its
+  * offenders, ready to diff against the file.
   */
 class ScanBudgetGuardSpec extends SparkSpec {
-  private val sf = "/root/testdata/sf0.001"
-
   private lazy val budgets: Map[String, Int] = {
     val in = getClass.getResourceAsStream("/scan_budgets.tsv")
     require(in != null, "scan_budgets.tsv missing from test resources")
@@ -47,30 +45,36 @@ class ScanBudgetGuardSpec extends SparkSpec {
     * compensating streaming-source test below, which runs them and
     * pins each executed stream's file-source count from its own
     * progress events. */
-  private val streamingSkip: Set[String] =
-    graft.operators.StreamingQueries.all.map(_.name).toSet
+  private val streamingSkip: Set[String] = PlanCensus.streaming
+
+  /** The budget rule over one table name per planned scan: why it fails. */
+  private def budgetViolation(name: String, scans: Seq[String]): Option[String] = {
+    val budget = budgets.getOrElse(name, scans.distinct.size)
+    if (scans.size > budget)
+      Some(s"$name: ${scans.size} planned scans (budget $budget; " +
+        s"tables ${scans.groupBy(identity).map { case (t, xs) => s"$t×${xs.size}" }.mkString(",")})")
+    else if (budgets.contains(name) && scans.size < budget)
+      // a plan that IMPROVED below its recorded budget must tighten
+      // the TSV, or the stale slack silently re-admits regressions
+      // up to the old count
+      Some(s"$name: ${scans.size} planned scans BELOW recorded budget " +
+        s"$budget — regenerate scan_budgets.tsv to keep the gate tight")
+    else None
+  }
 
   test("every registered query stays inside its planned parquet-scan budget") {
-    val offenders = SparkEntry.registry.filterNot(q => streamingSkip(q.name)).flatMap { q =>
-      val scans = PlanAudit.parquetScanTables(q.fn(spark, sf))
-      val budget = budgets.getOrElse(q.name, scans.distinct.size)
-      if (scans.size > budget)
-        Some(s"${q.name}: ${scans.size} planned scans (budget $budget; " +
-          s"tables ${scans.groupBy(identity).map { case (t, xs) => s"$t×${xs.size}" }.mkString(",")})")
-      else if (budgets.contains(q.name) && scans.size < budget)
-        // a plan that IMPROVED below its recorded budget must tighten
-        // the TSV, or the stale slack silently re-admits regressions
-        // up to the old count
-        Some(s"${q.name}: ${scans.size} planned scans BELOW recorded budget " +
-          s"$budget — regenerate scan_budgets.tsv to keep the gate tight")
-      else None
+    val offenders = PlanCensus.entries.flatMap(e => budgetViolation(e.name, e.scanTables))
+    lazy val regenerated = PlanCensus.entries.sortBy(_.name).collect {
+      case e if e.scanTables.size > e.scanTables.distinct.size =>
+        s"${e.name}\t${e.scanTables.size}\t${e.scanTables.distinct.size}"
     }
     assert(offenders.isEmpty,
       "queries outside their scan budget (re-reading a table costs a " +
         "full extra pass at 100 TB — materialize the shared intermediate " +
         "with Fx.materialize, or deliberately whitelist in scan_budgets.tsv; " +
         "improved plans must re-tighten the TSV):\n  " +
-        offenders.mkString("\n  "))
+        offenders.mkString("\n  ") +
+        "\nregenerated scan_budgets.tsv rows:\n" + regenerated.mkString("", "\n", "\n"))
   }
 
   test("skip set stays exactly the streaming registry — no other query escapes the sweep") {
@@ -80,7 +84,11 @@ class ScanBudgetGuardSpec extends SparkSpec {
     // defined AS StreamingQueries.all, so this pins the INTENT: any
     // future skip-set broadening must rewrite this test with a stated
     // reason, the way the TSV states its budgets
-    assert(streamingSkip === graft.operators.StreamingQueries.all.map(_.name).toSet)
+    val streaming = graft.operators.StreamingQueries.all.map(_.name).toSet
+    assert(streamingSkip === streaming)
+    // and the census every plan gate reads holds each other query once
+    assert(PlanCensus.entries.map(_.name).sorted ===
+      SparkEntry.registry.map(_.name).filterNot(streaming).sorted)
   }
 
   /** Every streaming-skip entry must either carry its own pin in the
@@ -155,7 +163,7 @@ class ScanBudgetGuardSpec extends SparkSpec {
       }
       spark.streams.addListener(listener)
       try {
-        byName(name).fn(spark, sf).collect()
+        byName(name).fn(spark, PlanCensus.sf).collect()
         // listener bus is async — poll briefly for the progress events
         val deadline = System.nanoTime() + 10000000000L
         while (events.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
@@ -183,13 +191,13 @@ class ScanBudgetGuardSpec extends SparkSpec {
     // of deriving all rungs from one scan. The budget logic (unlisted
     // query → scans ≤ distinct tables) must flag it.
     import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val docs = spark.read.parquet(s"${PlanCensus.sf}/documents.parquet")
     def rung(w: Int) = docs.select(col("doc_id"), lit(w).as("wlen"))
     val regressed = rung(8).union(rung(16)).union(rung(32)).union(rung(64))
-    val scans = PlanAudit.parquetScanTables(regressed)
+    val scans = PlanCensus.parquetScanTables(regressed)
     assert(scans.size === 4 && scans.distinct.size === 1,
       s"fixture did not produce the expected 4×-scan plan: $scans")
-    assert(scans.size > scans.distinct.size,
+    assert(budgetViolation("q552_first_draft", scans).nonEmpty,
       "guard predicate failed to flag the deliberately-regressed fixture")
   }
 }

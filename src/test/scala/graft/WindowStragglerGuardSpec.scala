@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-
 /** Mechanical guard against the q163/q174 straggler shape: a window
   * partitioned ONLY by known low-cardinality enum keys (event types,
   * sources, priorities, …) applied to an UNCOLLAPSED base relation
@@ -17,76 +13,13 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * child without crossing an Aggregate (which bounds rows to the
   * group domain) or a GlobalLimit. Windows with a high-cardinality
   * key anywhere in the partition spec (user_id, doc_id, o_custkey)
-  * scale out naturally and are exempt.
+  * scale out naturally and are exempt. Both rules (the GLOBAL one
+  * stricter about Aggregates) live in [[PlanCensus]].
   */
 class WindowStragglerGuardSpec extends SparkSpec {
-  private val sf = "/root/testdata/sf0.001"
-
-  /** Enum-like keys whose domain does NOT grow with data volume. */
-  private val lowCard = Set(
-    "event_type", "source", "priority", "lang", "segment",
-    "c_mktsegment", "o_orderpriority", "o_orderstatus", "l_returnflag",
-    "l_linestatus", "from_type", "to_type", "p_brand", "flag",
-    "r_name", "n_name", "is_blocked", "domain")
-
-  private def rawLeafBelow(p: LogicalPlan): Boolean = p match {
-    case _: Aggregate => false // collapsed to group-domain size
-    case _: GlobalLimit => false // bounded row count
-    case _: graft.plans.TopKPerGroupNode => false // bounded to k × groups
-    case _: LocalRelation => false // literal in-memory fixture
-    case _: OneRowRelation => false
-    case l: LeafNode =>
-      // file/table scans grow with data; anything else leaf-like
-      // (e.g. a streaming memory sink's table) is judged by kind
-      l.isInstanceOf[LogicalRelation] ||
-        l.getClass.getSimpleName.contains("DataSourceV2")
-    case other => other.children.exists(rawLeafBelow)
-  }
-
-  /** Keys whose distinct-value count GROWS with corpus size — a
-    * `groupBy` on one of these does NOT collapse the relation to a
-    * bounded domain, so an Aggregate over them cannot exempt a global
-    * window above it. This is the cardinality carve-out the r12
-    * verdict asked for: post-aggregate day/brand/segment grids are
-    * calendar- or enum-bounded (fine under a global window), but a
-    * vocab (`w`), doc-key, or entity-key aggregate is corpus-sized —
-    * exactly the q166 rarity-rank shape this extension exists to
-    * catch (Ranking.seqIds is the scale-safe re-expression). */
-  private val corpusGrowing = Set(
-    "w", "word", "token", "term", "shingle", "gram", "ngram", "pair",
-    "doc_id", "vec_id", "user_id", "event_id", "session_id", "id",
-    "c_custkey", "o_custkey", "o_orderkey", "l_orderkey", "l_partkey",
-    "p_partkey", "s_suppkey", "text", "payload", "url", "hash", "sig")
-
-  /** True when `p` can feed a GLOBAL (unpartitioned) window unbounded
-    * rows: some corpus-growing source is reachable without crossing a
-    * row-bounding node. Unlike [[rawLeafBelow]], an Aggregate only
-    * bounds when its grouping keys are NOT corpus-growing. */
-  private def unboundedBelowGlobal(p: LogicalPlan): Boolean = p match {
-    case a: Aggregate =>
-      val growing = a.groupingExpressions.exists(_.references.exists(att =>
-        corpusGrowing(att.name.toLowerCase)))
-      if (growing) true else false // bounded grid (day/brand/enum)
-    case _: GlobalLimit => false
-    case _: graft.plans.TopKPerGroupNode => false
-    case _: LocalRelation => false
-    case _: OneRowRelation => false
-    case l: LeafNode =>
-      l.isInstanceOf[LogicalRelation] ||
-        l.getClass.getSimpleName.contains("DataSourceV2")
-    case other => other.children.exists(unboundedBelowGlobal)
-  }
 
   test("no GLOBAL (unpartitioned) window over a corpus-growing relation") {
-    val skip = graft.operators.StreamingQueries.all.map(_.name).toSet
-    val offenders = SparkEntry.registry.filterNot(q => skip(q.name)).flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.optimizedPlan
-      plan.collect {
-        case w: Window if w.partitionSpec.isEmpty &&
-            unboundedBelowGlobal(w.child) =>
-          q.name
-      }
-    }.distinct
+    val offenders = PlanCensus.entries.filter(_.globalWindows.nonEmpty).map(_.name)
     assert(offenders.isEmpty,
       s"global window over a corpus-growing relation (one task sorts " +
         s"data that grows with the corpus — use Ranking.seqIds): " +
@@ -100,47 +33,25 @@ class WindowStragglerGuardSpec extends SparkSpec {
     // it — this is the proof the extension bites, not a tautology.
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.{Window => W}
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val docs = spark.read.parquet(s"${PlanCensus.sf}/documents.parquet")
     val old = docs
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("df"))
       .withColumn("r", row_number().over(W.orderBy(col("df"), col("w"))))
-    val flagged = old.queryExecution.optimizedPlan.collect {
-      case w: Window if w.partitionSpec.isEmpty &&
-          unboundedBelowGlobal(w.child) => w
-    }
-    assert(flagged.nonEmpty,
+    assert(PlanCensus.globalWindows(old.queryExecution.optimizedPlan).nonEmpty,
       "guard failed to flag the known-straggler global vocab-rank window")
   }
 
   test("q166's prefix-join path carries no unpartitioned window at all") {
     // The r12 verdict's named straggler: the vocab rarity rank was a
     // single-partition window; now Ranking.seqIds. Pin the absence.
-    val q = SparkEntry.registry.find(_.name.startsWith("q166")).get
-    val plan = q.fn(spark, sf).queryExecution.optimizedPlan
-    val globals = plan.collect {
-      case w: Window if w.partitionSpec.isEmpty => w
-    }
+    val globals = PlanCensus("q166_prefix_jaccard_join").unpartitionedWindows
     assert(globals.isEmpty,
       s"q166 regained an unpartitioned window: ${globals.mkString(";")}")
   }
 
   test("no window partitioned only by low-cardinality keys over an uncollapsed base relation") {
-    val skip = graft.operators.StreamingQueries.all.map(_.name).toSet
-    val offenders = SparkEntry.registry.filterNot(q => skip(q.name)).flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.optimizedPlan
-      plan.collect {
-        case w: Window if w.partitionSpec.nonEmpty &&
-            w.partitionSpec.forall {
-              case a: AttributeReference => lowCard(a.name.toLowerCase)
-              case _ => false
-            } && rawLeafBelow(w.child) =>
-          val keys = w.partitionSpec.collect {
-            case a: AttributeReference => a.name
-          }.mkString(",")
-          s"${q.name}[$keys]"
-      }
-    }
+    val offenders = PlanCensus.entries.flatMap(e => e.lowCardWindows.map(k => s"${e.name}[$k]"))
     assert(offenders.isEmpty,
       s"low-cardinality window over an uncollapsed relation (use " +
         s"Ranking.groupRanks or pre-aggregate): ${offenders.mkString("; ")}")
