@@ -24,7 +24,9 @@ change won (ties count for neither side) and a verdict:
   held        otherwise.
 
 It also prints failed/attempted per side, and on how many seeds the
-ridge R² the housing_etl workload checks is identical on both sides.
+ridge R² the housing_etl workload checks is identical on both sides and
+on how many it agrees within 1e-9 (two correct solvers of the same fit
+can differ in the last digits).
 The exit status is 1 if any run failed to produce a record.
 """
 import argparse
@@ -95,6 +97,12 @@ def summarize(metric, pairs):
             "wins": wins, "verdict": verdict}
 
 
+def r2_close(a, b, tol=1e-9):
+    """Whether two checked R² values (one per timed pass) agree within tol."""
+    a, b = ([x] if not isinstance(x, list) else x for x in (a, b))
+    return len(a) == len(b) and all(abs(x - y) <= tol for x, y in zip(a, b))
+
+
 def report(spec, pairs):
     def spread(m, q1, q3):
         return f"{m:.4g} [{q1:.4g}, {q3:.4g}]"
@@ -118,7 +126,9 @@ def report(spec, pairs):
           for p, c in pairs if p and c and "r2" in p["jvm"].get("checked", {})]
     if r2:
         same = sum(a == b for a, b in r2)
-        print(f"ridge R² identical on both sides: {same}/{len(r2)} seeds")
+        close = sum(r2_close(a, b) for a, b in r2)
+        print(f"ridge R² identical on both sides: {same}/{len(r2)} seeds, "
+              f"within 1e-9: {close}/{len(r2)} seeds")
 
 
 def main():

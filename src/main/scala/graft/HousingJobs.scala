@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *  1. `scrapeDay`   — trulia_scrape.py main(): pages → rows → clean →
   *                     partitioned daily sink (idempotent re-run).
   *  2. `analyze`     — trulia_csv_to_nlp.ipynb: daily CSV union →
-  *                     amenity flags → one-hot → ridge CV model, fit
-  *                     on the featurized frame materialized once.
+  *                     amenity flags → one-hot → ridge CV model from
+  *                     one pass of per-fold moment sums.
   *  3. `sqlRoundTrip`— load_save_sql.ipynb: JDBC pull → union → append.
   */
 object HousingJobs {
@@ -56,23 +56,20 @@ object HousingJobs {
   }
 
   /** Lifecycle 2: multi-day analysis — [[features]], then a ridge price
-    * model with 5-fold CV. The typed frame is materialized once (a
-    * local checkpoint on a local master, see `Fx.materialize`): the
-    * split, every CV fold's train and validation pass, the refit and R²
-    * read its blocks instead of re-running the store scan and the
-    * featurization, which the CV's RDD path would otherwise do for each
-    * of them. The blocks are freed before returning. Returns (the lazy
-    * featurized frame, held-out R², coefficient table). */
+    * model with 5-fold CV over `alphas` (the reference's RidgeCV grid by
+    * default). One Spark job reads the typed frame once and reduces it
+    * to exact moment sums per CV fold of the 75% train split and for the
+    * test split (`PriceModel.splitCrossValidate`); every fold fit, the
+    * refit and the held-out R² are closed-form solves on the driver.
+    * With the zip list that is two jobs, and the store is scanned twice.
+    * Returns (the lazy featurized frame, held-out R², coefficient
+    * table). */
   def analyze(spark: SparkSession, dailyDir: String,
-      alphas: Seq[Double] = Seq(0.1, 1.0, 10.0))
+      alphas: Seq[Double] = PriceModel.alphaGrid)
       : (DataFrame, Double, Seq[(String, Double)]) = {
     val (featurized, featureCols) = features(spark, dailyDir)
-    val typed = Fx.materialize(featurized)
-    try {
-      val (train, test) = PriceModel.split(typed)
-      val model = PriceModel.crossValidate(train, featureCols, alphas)
-      (featurized, PriceModel.r2(model, test), PriceModel.coefficients(model, featureCols))
-    } finally Fx.free(typed)
+    val (model, r2) = PriceModel.splitCrossValidate(featurized, featureCols, alphas)
+    (featurized, r2, PriceModel.coefficients(model))
   }
 
   /** Lifecycle 3: SQL round trip — pull two projections, union, append

@@ -3016,11 +3016,11 @@ object DecisionQueries {
 
   /** q558 — EXACT closed-form ridge regression (normal equations +
     * Cramer on integer Gram sums): the oracle-checked counterpart to
-    * the ML layer's tolerance-band ridge (M4/M5,
-    * ml/PriceModel.scala — the sklearn-vs-MLlib solver divergence
-    * keeps the 60-feature housing model band-checked only, SURVEY §7
-    * hard part (b); reference anchor trulia_csv_to_nlp.ipynb cells
-    * 22-31, RidgeCV). Same estimator semantics as sklearn
+    * the ML layer's ridge (M4/M5, ml/PriceModel.scala, which is pinned
+    * to MLlib's pipeline at 1e-9 and, against sklearn's BASELINE
+    * 0.7292, stays a tolerance band, SURVEY §7 hard part (b);
+    * reference anchor trulia_csv_to_nlp.ipynb cells 22-31, RidgeCV).
+    * Same estimator semantics as sklearn
     * Ridge(alpha=10, fit_intercept=True) on a small fixed feature
     * set: center X and y, solve the penalized slope system
     * (XcᵀXc + αI)β = Xcᵀyc, recover the unpenalized intercept as
@@ -3037,7 +3037,7 @@ object DecisionQueries {
     * Scale shape: one scan collapses the corpus to nine moment sums
     * (map-side partial aggs); everything after is scalar arithmetic
     * on a single row. PriceModelSpec cites this as the exact
-    * regression readout beside its statistical R² band. */
+    * regression readout beside the housing model's R² band. */
   def q558(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val alpha = 10
