@@ -61,7 +61,8 @@ object HousingJobs {
     * to exact moment sums per CV fold of the 75% train split and for the
     * test split (`PriceModel.splitCrossValidate`); every fold fit, the
     * refit and the held-out R² are closed-form solves on the driver.
-    * With the zip list that is two jobs, and the store is scanned twice.
+    * After [[features]]' own jobs (the zip list) that is one Spark job,
+    * and the store is scanned twice: by the zip list and by that pass.
     * Returns (the lazy featurized frame, held-out R², coefficient
     * table). */
   def analyze(spark: SparkSession, dailyDir: String,

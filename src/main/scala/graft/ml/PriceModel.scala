@@ -27,27 +27,34 @@ object PriceModel {
   /** The reference's RidgeCV grid, `np.linspace(.1, 10, 100)` (SURVEY M4). */
   val alphaGrid: Seq[Double] = (0 until 99).map(i => 0.1 + i * (9.9 / 99)) :+ 10.0
 
-  /** A seeded hash of each row's numeric columns (features, label) in
-    * [0, n). `randomSplit` and CrossValidator's own folds sample per
+  /** The label column, the CV fold count and the seed of the split and
+    * folds: one value each, so [[splitCrossValidate]] cannot drift from
+    * [[split]] + [[crossValidate]] + [[r2]]. */
+  private[graft] val Label = "price"
+  private[graft] val Folds = 5
+  private[graft] val Seed = 7L
+
+  /** A [[Seed]]ed hash of each row's numeric columns (features, label)
+    * in [0, n). `randomSplit` and CrossValidator's own folds sample per
     * partition, so the same rows packed differently split differently;
     * text columns such as `url` (the page's path) vary between runs.
     * The identity UDF is marked nondeterministic so the optimizer infers
     * no constraints from a filter on the bucket: over an unmaterialized
     * frame of ~100 derived columns that inference ran for minutes.
     * PriceModelSpec's MLlib reference takes its CV folds from here. */
-  private[graft] def rowBucket(df: DataFrame, seed: Long, n: Int): Column = {
+  private[graft] def rowBucket(df: DataFrame, n: Int): Column = {
     val numeric = df.schema.fields.toSeq.collect {
       case f if f.dataType.isInstanceOf[NumericType] => col(s"`${f.name}`")
     }
     udf((b: Long) => b).asNondeterministic()(
-      pmod(xxhash64(lit(seed) +: lit(n) +: numeric: _*), lit(n.toLong)))
+      pmod(xxhash64(lit(Seed) +: lit(n) +: numeric: _*), lit(n.toLong)))
   }
 
-  private def testSide(df: DataFrame, seed: Long): Column = rowBucket(df, seed, 100) >= 75
+  private def testSide(df: DataFrame): Column = rowBucket(df, 100) >= 75
 
   /** M1: the reference's 75/25 split, seeded (sklearn default + seed 7). */
-  def split(df: DataFrame, seed: Long = 7L): (DataFrame, DataFrame) = {
-    val test = testSide(df, seed)
+  def split(df: DataFrame): (DataFrame, DataFrame) = {
+    val test = testSide(df)
     (df.filter(!test), df.filter(test))
   }
 
@@ -71,16 +78,15 @@ object PriceModel {
     * order, so the same frame gives the same bits on every call. A null
     * (or NaN) feature or label fails the job, as VectorAssembler's
     * default `handleInvalid = "error"` does; it is never summed as 0. */
-  private def moments(df: DataFrame, featureCols: Seq[String], labelCol: String,
+  private def moments(df: DataFrame, featureCols: Seq[String],
       group: Column, groups: Int): IndexedSeq[Moments] = {
-    val names = labelCol +: featureCols
+    val names = Label +: featureCols
     val d = featureCols.size
     val w = 3 + 2 * d + d * (d + 1) / 2
     val rows = df.select(group.cast("int") +: names.map(c => col(s"`$c`").cast("double")): _*)
     val parts = rows.queryExecution.toRdd.mapPartitions { it =>
       val acc = Array.ofDim[Double](groups, w)
       val x = new Array[Double](d)
-      val nz = new Array[Int](d)
       it.foreach { row =>
         var i = 1
         while (i <= d + 1) {
@@ -91,25 +97,16 @@ object PriceModel {
         val a = acc(row.getInt(0))
         val y = row.getDouble(1)
         a(0) += 1; a(1) += y; a(2) += y * y
-        // one-hot and amenity columns are mostly 0: only nonzero features
-        // add to the sums (adding a 0 product changes no sum)
-        var m = 0
-        var j = 0
-        while (j < d) {
-          x(j) = row.getDouble(2 + j)
-          if (x(j) != 0.0) { nz(m) = j; m += 1 }
-          j += 1
-        }
-        var p = 0
-        while (p < m) {
-          val k = nz(p)
-          val xk = x(k)
+        var k = 0
+        while (k < d) {
+          val xk = row.getDouble(2 + k)
+          x(k) = xk
           a(3 + k) += xk
           a(3 + d + k) += xk * y
           val base = 3 + 2 * d + k * (k + 1) / 2
-          var q = 0
-          while (q <= p) { a(base + nz(q)) += x(nz(q)) * xk; q += 1 }
-          p += 1
+          var j = 0
+          while (j <= k) { a(base + j) += x(j) * xk; j += 1 }
+          k += 1
         }
       }
       Iterator.single(acc)
@@ -217,27 +214,24 @@ object PriceModel {
   /** M4-M5: RidgeCV equivalent — 5-fold CV over an α grid, R², in one
     * pass over `train`. */
   def crossValidate(train: DataFrame, featureCols: Seq[String],
-      alphas: Seq[Double] = alphaGrid,
-      labelCol: String = "price", folds: Int = 5, seed: Long = 7L): RidgeCV =
-    crossValidated(featureCols,
-      moments(train, featureCols, labelCol, rowBucket(train, seed, folds), folds), alphas)
+      alphas: Seq[Double] = alphaGrid): RidgeCV =
+    crossValidated(featureCols, moments(train, featureCols, rowBucket(train, Folds), Folds), alphas)
 
   /** M1-M7 in one pass over `df`: the rows of [[split]]'s test side form
     * one group and its train side's CV folds the others, so the result
     * is [[crossValidate]] on the train side and [[r2]] on the test side,
     * bit for bit. Returns (the model, held-out R²). */
-  def splitCrossValidate(df: DataFrame, featureCols: Seq[String],
-      alphas: Seq[Double] = alphaGrid,
-      labelCol: String = "price", folds: Int = 5, seed: Long = 7L): (RidgeCV, Double) = {
-    val group = when(testSide(df, seed), lit(folds)).otherwise(rowBucket(df, seed, folds))
-    val sums = moments(df, featureCols, labelCol, group, folds + 1)
-    val model = crossValidated(featureCols, sums.take(folds), alphas)
-    (model, model.best.r2(sums(folds)))
+  private[graft] def splitCrossValidate(df: DataFrame, featureCols: Seq[String],
+      alphas: Seq[Double]): (RidgeCV, Double) = {
+    val group = when(testSide(df), lit(Folds)).otherwise(rowBucket(df, Folds))
+    val sums = moments(df, featureCols, group, Folds + 1)
+    val model = crossValidated(featureCols, sums.take(Folds), alphas)
+    (model, model.best.r2(sums(Folds)))
   }
 
   /** M6-M7: R² on held-out data. */
-  def r2(model: RidgeCV, test: DataFrame, labelCol: String = "price"): Double =
-    model.best.r2(moments(test, model.featureCols, labelCol, lit(0), 1).head)
+  def r2(model: RidgeCV, test: DataFrame): Double =
+    model.best.r2(moments(test, model.featureCols, lit(0), 1).head)
 
   /** M8: (feature, coefficient on the standardized feature) table sorted
     * by coefficient desc. */

@@ -26,7 +26,7 @@ class HousingJobsSpec extends SparkSpec {
     assert(spark.read.parquet(store).count() == 30)
 
     // the jobs, every completed stage's RDD lineage, and the persisted
-    // RDDs, around analyze
+    // RDDs, around `body`
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val scanStages = new java.util.concurrent.atomic.AtomicInteger
@@ -35,21 +35,25 @@ class HousingJobsSpec extends SparkSpec {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scanStages.incrementAndGet()
     }
-    assert(Bridge.drainListenerBus(spark))
-    val persistedBefore = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(listener)
-    val (featurized, r2, coefs) =
-      try HousingJobs.analyze(spark, store)
+    def observed[T](body: => T): T = {
+      assert(Bridge.drainListenerBus(spark))
+      jobs.set(0); scanStages.set(0)
+      sc.addSparkListener(listener)
+      try body
       finally { assert(Bridge.drainListenerBus(spark)); sc.removeSparkListener(listener) }
+    }
+    observed(HousingJobs.features(spark, store))
+    val featuresJobs = jobs.get
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val (featurized, r2, coefs) = observed(HousingJobs.analyze(spark, store))
     assert(featurized.columns.contains("pool"))
     assert(featurized.columns.contains("zipcode_78745")) // drop-first kept later zip
     assert(r2 > 0.9, s"strong linear signal should fit, r2=$r2")
     assert(coefs.nonEmpty)
-    // the parquet footer read, the zip list (one job per adaptive query
-    // stage of its `distinct`) and the one moments pass; every fold fit,
-    // the refit and R² are solved on the driver. The store's rows are
-    // scanned twice: the zip list and the moments pass.
-    assert(jobs.get <= 4, s"analyze ran ${jobs.get} jobs")
+    // features' jobs (the zip list) and the one moments pass; every fold
+    // fit, the refit and R² are solved on the driver. The store's rows
+    // are scanned twice: the zip list and the moments pass.
+    assert(jobs.get == featuresJobs + 1, s"analyze ran ${jobs.get} jobs, features $featuresJobs")
     assert(scanStages.get <= 2, s"${scanStages.get} stages scanned the store")
     assert(sc.getPersistentRDDs.keySet == persistedBefore, "analyze left RDDs persisted")
 

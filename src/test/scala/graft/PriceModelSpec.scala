@@ -38,9 +38,9 @@ class PriceModelSpec extends SparkSpec {
       .setEstimator(new Pipeline().setStages(Array(assembler, scaler, ridge)))
       .setEvaluator(new RegressionEvaluator().setLabelCol("price").setMetricName("r2"))
       .setEstimatorParamMaps(new ParamGridBuilder().addGrid(ridge.regParam, alphas).build())
-      .setNumFolds(5)
+      .setNumFolds(PriceModel.Folds)
       .setFoldCol("cv_fold")
-      .fit(train.withColumn("cv_fold", PriceModel.rowBucket(train, 7L, 5).cast("int")))
+      .fit(train.withColumn("cv_fold", PriceModel.rowBucket(train, PriceModel.Folds).cast("int")))
   }
 
   private def assertClose(what: String, got: Double, want: Double): Unit =
@@ -126,13 +126,13 @@ class PriceModelSpec extends SparkSpec {
     val cols = Seq("id", "sqft", "bed", "bath", "pool", "flag", "price")
     val allFlagged = rows.toDF(cols: _*)
     val (flaggedTrain, _) = PriceModel.split(allFlagged)
-    val inFold0 = flaggedTrain.filter(PriceModel.rowBucket(flaggedTrain, 7L, 5) === 0)
+    val inFold0 = flaggedTrain.filter(PriceModel.rowBucket(flaggedTrain, PriceModel.Folds) === 0)
       .select("id").as[String].collect().toSet
     val df = rows.map { case r @ (id, _, _, _, _, _, _) =>
       if (inFold0(id) && id.drop(1).toInt % 3 == 0) r else r.copy(_6 = 0.0)
     }.toDF(cols: _*)
     val (train, _) = PriceModel.split(df)
-    val flagByFold = train.groupBy(PriceModel.rowBucket(train, 7L, 5).as("fold"))
+    val flagByFold = train.groupBy(PriceModel.rowBucket(train, PriceModel.Folds).as("fold"))
       .agg(max("flag")).as[(Long, Double)].collect().toMap
     assert(flagByFold == Map(0L -> 1.0, 1L -> 0.0, 2L -> 0.0, 3L -> 0.0, 4L -> 0.0))
     val (model, _) = assertMatchesMllib(df, Seq("sqft", "bed", "bath", "pool", "flag"), Seq(0.1, 1.0, 10.0))
