@@ -7,17 +7,17 @@ import org.apache.spark.sql.types.NumericType
 
 /** Ridge price model — the reference's sklearn pipeline
   * (trulia_csv_to_nlp.ipynb cells 22-31, SURVEY §2.10): feature matrix →
-  * StandardScaler(withMean) → RidgeCV(α grid) with 5-fold CV scored on R².
+  * standard scaling (with mean) → RidgeCV(α grid), 5-fold CV scored on R².
   *
   * Ridge CV from sufficient statistics: one Spark job reduces the rows to
   * exact per-group moment sums (a CV fold, or the held-out split), and
   * every fit and score after that is a closed-form solve on the driver.
-  * The estimator is MLlib's pipeline, number for number:
-  * StandardScaler (mean, sample sd, scale 0 for a zero-sd column) →
-  * LinearRegression(elasticNetParam = 0) on its normal-equation solver
+  * The estimator is MLlib's ridge pipeline, number for number: its
+  * scaler (mean, sample sd, scale 0 for a zero-sd column) → linear
+  * regression (elasticNetParam = 0) on the normal-equation solver
   * (`WeightedLeastSquares`: feature and label standardization, α/σ_y on
-  * the diagonal, Cholesky) → CrossValidator's mean validation R² and
-  * first-argmax α → refit on every fold. PriceModelSpec pins avgMetrics,
+  * the diagonal, Cholesky) → the cross-validator's mean validation R²
+  * and first-argmax α → refit on every fold. PriceModelSpec pins avgMetrics,
   * α, test R² and every coefficient to that MLlib pipeline at 1e-9;
   * against sklearn (whose α is not MLlib's regParam) R² parity is a
   * tolerance band (SURVEY §5.5).
@@ -35,7 +35,7 @@ object PriceModel {
   private[graft] val Seed = 7L
 
   /** A [[Seed]]ed hash of each row's numeric columns (features, label)
-    * in [0, n). `randomSplit` and CrossValidator's own folds sample per
+    * in [0, n). `randomSplit` and MLlib's own CV folds sample per
     * partition, so the same rows packed differently split differently;
     * text columns such as `url` (the page's path) vary between runs.
     * The identity UDF is marked nondeterministic so the optimizer infers
@@ -76,8 +76,9 @@ object PriceModel {
     * `group` assigns the rows of `df` to. Each task sums its partition's
     * rows in order; the driver adds the partition sums in partition
     * order, so the same frame gives the same bits on every call. A null
-    * (or NaN) feature or label fails the job, as VectorAssembler's
-    * default `handleInvalid = "error"` does; it is never summed as 0. */
+    * (or NaN) feature or label fails the job, as MLlib's vector
+    * assembler does by default (`handleInvalid = "error"`); it is never
+    * summed as 0. */
   private def moments(df: DataFrame, featureCols: Seq[String],
       group: Column, groups: Int): IndexedSeq[Moments] = {
     val names = Label +: featureCols
@@ -140,7 +141,7 @@ object PriceModel {
     }
   }
 
-  /** MLlib's StandardScaler → LinearRegression(regParam = α,
+  /** MLlib's scaler → linear regression (regParam = α,
     * elasticNetParam = 0) on the rows summed in `m`. The scaled features
     * have mean 0 and sample sd 1, so `WeightedLeastSquares`' standardized
     * normal equations are (R + α/σ_y·I)·x = r, with R the features'
