@@ -4,7 +4,6 @@ import graft.functions.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** The training-data curation lifecycle as ONE composed engine job —
   * the end-to-end path a 100 TB corpus takes from raw documents to a
@@ -37,8 +36,8 @@ object CurationJobs {
     val dupBigramFrac = when(size(bigrams) === 0, lit(0.0))
       .otherwise(lit(1.0) - size(array_distinct(bigrams)).cast("double") / size(bigrams))
     val quality = TextAnalysis.qualityScore(col("text"))
-    val u = conv(substring(md5_fast(concat(col("doc_id").cast("string"), lit("#curate"))), 1, 8), 16, 10)
-      .cast("long").cast("double") / 4294967296.0
+    val u = Fx.md5Prefix(concat(col("doc_id").cast("string"), lit("#curate")), 8)
+      .cast("double") / 4294967296.0
     docs
       .withColumn("__w", split(col("text"), " "))
       .withColumn("pass_repetition", dupBigramFrac <= 0.2)

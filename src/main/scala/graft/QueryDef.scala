@@ -108,6 +108,22 @@ object Fx {
   def sqlR4(e: String): String = sqlR(e, 10000L)
   def sqlR6(e: String): String = sqlR(e, 1000000L)
 
+  /** The first `hexChars` hex digits of md5(s) read as a long — the
+    * one derivation of every seeded split, arm, fold, shard, uniform
+    * draw and sketch hash, equal to the oracle's
+    * `('0x' || substr(md5(s), 1, hexChars))::BIGINT`. Built from the
+    * 32-bit chunks of the native `md5_chunk`, which share one memoized
+    * digest per row: no hex string, substring or radix parse. Sixteen
+    * digits would not fit a signed BIGINT. */
+  def md5Prefix(s: Column, hexChars: Int): Column = {
+    require(hexChars >= 1 && hexChars <= 15, s"md5Prefix: hexChars must be in 1..15, got $hexChars")
+    import graft.plans.GraftFunctions.md5_chunk
+    val bits = 4 * hexChars
+    if (bits <= 32) shiftrightunsigned(md5_chunk(s, 0), 32 - bits)
+    else shiftleft(md5_chunk(s, 0), bits - 32)
+      .bitwiseOR(shiftrightunsigned(md5_chunk(s, 1), 64 - bits))
+  }
+
   // ---- grid-first deterministic aggregates ----------------------------
   // Sums of p-decimal-grid data land EXACTLY on the p-decimal grid, so
   // rounding at grid scale first recovers bit-identical values in both

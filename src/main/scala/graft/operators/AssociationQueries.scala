@@ -4,7 +4,6 @@ import graft.{Fx, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** Association / co-occurrence operators, round 7: interval-overlap
   * joins (via the grid-blocked [[IntervalJoin]] operator), weighted
@@ -888,8 +887,8 @@ object AssociationQueries {
       .groupBy($"user_id")
       .agg(max(($"event_type" === "purchase").cast("long")).as("converted"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit("control")).otherwise(lit("treatment")))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit("control")).otherwise(lit("treatment")))
     val arms = users.groupBy($"arm")
       .agg(count(lit(1)).as("n_users"),
         sum($"converted").cast("long").as("n_converted"))
@@ -1239,8 +1238,8 @@ object AssociationQueries {
         sum(when($"event_type" === "purchase",
           floor($"value" * 100).cast("long")).otherwise(lit(0L))).as("y"))
       .withColumn("z",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit(0L)).otherwise(lit(1L)))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit(0L)).otherwise(lit(1L)))
     per.agg(
         sum(when($"z" === 0L, 1L).otherwise(0L)).as("n0"),
         sum(when($"z" === 1L, 1L).otherwise(0L)).as("n1"),
@@ -1334,8 +1333,8 @@ object AssociationQueries {
       .agg(sum(when($"event_type" === "purchase",
         floor($"value" * 100).cast("long")).otherwise(lit(0L))).as("y"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit("control")).otherwise(lit("treatment")))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit("control")).otherwise(lit("treatment")))
     val ranked = Ranking.groupRanks(per, Seq("arm"), 8, $"y", $"user_id")
       .transform(graft.Fx.materialize) // counts + decile probe
     val targets = ranked.groupBy($"arm").agg(count(lit(1)).as("u"))
@@ -1503,8 +1502,8 @@ object AssociationQueries {
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n"), sum($"cents").as("x"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit("control")).otherwise(lit("treatment")))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit("control")).otherwise(lit("treatment")))
     val m = per.groupBy($"arm").agg(
         count(lit(1)).as("u"),
         sum($"n").as("sn"), sum($"x").as("sx"),
@@ -1622,8 +1621,8 @@ object AssociationQueries {
         sum(when($"event_type" === "purchase" && $"ts" >= cut, cents)
           .otherwise(0L)).cast("long").as("y"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit("control")).otherwise(lit("treatment")))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit("control")).otherwise(lit("treatment")))
     val m = perUser.agg(
       count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"),
@@ -1718,8 +1717,8 @@ object AssociationQueries {
       .agg((sum(($"event_type" === "purchase").cast("long")) * 5 >
         count(lit(1))).cast("long").as("conv"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit("control")).otherwise(lit("treatment")))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit("control")).otherwise(lit("treatment")))
     val m = users.agg(
       sum(when($"arm" === "treatment", 1L).otherwise(0L)).as("nt"),
       sum(when($"arm" === "treatment", $"conv").otherwise(0L)).as("ct"),
@@ -1800,9 +1799,8 @@ object AssociationQueries {
     val salted = users
       .select($"user_id", explode(sequence(lit(1), lit(20))).as("salt"))
       .withColumn("arm",
-        (conv(substring(md5_fast(concat($"user_id".cast("string"),
-          lit("#srm"), $"salt".cast("string"))), 1, 8), 16, 10)
-          .cast("long") % 2).cast("long"))
+        (Fx.md5Prefix(concat($"user_id".cast("string"),
+          lit("#srm"), $"salt".cast("string")), 8) % 2).cast("long"))
     salted.groupBy($"salt")
       .agg(sum(lit(1L) - $"arm").as("n_ctl"), sum($"arm").as("n_treat"))
       .withColumn("chi2_micro", expr(
@@ -2042,7 +2040,7 @@ object AssociationQueries {
     val o = Tables.orders(s, d).select($"o_orderkey",
       $"o_orderpriority".as("grp"),
       floor($"o_totalprice" * 100).cast("long").as("cents"),
-      (conv(substring(md5_fast(concat($"o_orderkey".cast("string"), lit("#conf"))), 1, 8), 16, 10) % 3)
+      (Fx.md5Prefix(concat($"o_orderkey".cast("string"), lit("#conf")), 8) % 3)
         .cast("int").as("fold"))
       .transform(Fx.materialize)
     val train = o.filter($"fold" === 0)
@@ -2143,8 +2141,8 @@ object AssociationQueries {
       .agg((sum(($"event_type" === "purchase").cast("long")) * 5 >
         count(lit(1))).cast("long").as("conv"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit("control")).otherwise(lit("treatment")))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit("control")).otherwise(lit("treatment")))
     val m = users.agg(
       sum(when($"arm" === "treatment", 1L).otherwise(0L)).as("nt"),
       sum(when($"arm" === "treatment", $"conv").otherwise(0L)).as("ct"),
@@ -2216,7 +2214,7 @@ object AssociationQueries {
           .otherwise(0L).cast("long")).as("cents"))
       .select($"user_id", $"n_ev", $"n_days", $"cents",
         expr("n_ev div 10").as("b_act"), expr("n_days div 5").as("b_days"),
-        (conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#cem"))), 1, 8), 16, 10) % 2)
+        (Fx.md5Prefix(concat($"user_id".cast("string"), lit("#cem")), 8) % 2)
           .cast("int").as("treat"))
       .transform(Fx.materialize)
     val matchedStrata = users.groupBy($"b_act", $"b_days")
@@ -2384,7 +2382,7 @@ object AssociationQueries {
           .otherwise(0L).cast("long")).as("cents"))
       .select($"user_id", expr("n_ev div 10").as("b_act"),
         expr("n_days div 5").as("b_days"), $"cents",
-        (conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#cem"))), 1, 8), 16, 10) % 2)
+        (Fx.md5Prefix(concat($"user_id".cast("string"), lit("#cem")), 8) % 2)
           .cast("int").as("treat"))
     val strata = users.groupBy($"b_act", $"b_days")
       .agg(sum(when($"treat" === 1, 1L).otherwise(0L)).as("n_t"),
@@ -2468,7 +2466,7 @@ object AssociationQueries {
       .select(expr("(d0 + d1) div 2").as("cut"))
     val users = ev.select($"user_id").distinct()
       .withColumn("treat",
-        (conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#did"))), 1, 8), 16, 10) % 2)
+        (Fx.md5Prefix(concat($"user_id".cast("string"), lit("#did")), 8) % 2)
           .cast("int"))
     val periods = s.range(2).toDF("post")
     val panel = users.crossJoin(broadcast(periods))
@@ -2579,8 +2577,8 @@ object AssociationQueries {
       .agg(sum($"n_ev").as("n_ev"), sum($"n_purch").as("n_purch"))
       .withColumn("conv", ($"n_purch" * 5 > $"n_ev").cast("long"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, lit("control")).otherwise(lit("treatment")))
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
+          lit("control")).otherwise(lit("treatment")))
     val m = cum.groupBy($"look", $"cut", $"crit").agg(
       sum(when($"arm" === "treatment", 1L).otherwise(0L)).as("nt"),
       sum(when($"arm" === "treatment", $"conv").otherwise(0L)).as("ct"),
@@ -2843,8 +2841,7 @@ object AssociationQueries {
       .groupBy($"user_id")
       .agg(max(($"event_type" === "purchase").cast("long")).as("conv"))
       .withColumn("t",
-        (conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#exp1"))), 1, 8),
-          16, 10).cast("long") % 2 =!= 0).cast("long"))
+        (Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 =!= 0).cast("long"))
       .agg(
         sum(when($"t" === 1L, $"conv")).as("c1"),
         sum($"t").as("n1"),

@@ -730,8 +730,7 @@ object CurationQueries {
     import s.implicits._
     val nShards = 16
     val docs = Tables.documents(s, d).select(
-      (conv(substring(md5_fast(concat($"doc_id".cast("string"), lit("#shard"))), 1, 8), 16, 10)
-        .cast("long") % nShards).as("shard"),
+      (Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#shard")), 8) % nShards).as("shard"),
       (size(split($"text", " "))).cast("long").as("toks"))
     val byShard = docs.groupBy($"shard")
       .agg(count(lit(1)).as("n_docs"), sum($"toks").as("tokens"))
@@ -793,12 +792,11 @@ object CurationQueries {
     import s.implicits._
     val nHosts = hostVocab.size
     val blocked = Seq("contentfarm.example", "linkspam.example")
-    val hostIdx = (conv(substring(md5_fast(concat($"doc_id".cast("string"), lit("#host"))), 1, 8), 16, 10)
-      .cast("long") % nHosts).cast("int")
+    val hostIdx = (Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#host")), 8) % nHosts)
+      .cast("int")
     val hostCol = element_at(
       array(hostVocab.map(lit): _*), hostIdx + 1)
-    val q100 = (conv(substring(md5_fast(concat($"doc_id".cast("string"), lit("#dq"))), 1, 8), 16, 10)
-      .cast("long") % 101L).as("q100")
+    val q100 = (Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#dq")), 8) % 101L).as("q100")
     val docs = Tables.documents(s, d).select(
       hostCol.as("domain"),
       size(split($"text", " ")).cast("long").as("toks"),

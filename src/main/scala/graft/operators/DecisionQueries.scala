@@ -1437,8 +1437,7 @@ object DecisionQueries {
     * vs pinned χ²(2). Scale: one scan, one (lang × 3) groupBy. */
   def q527(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val u = conv(substring(md5_fast(concat($"doc_id".cast("string"),
-      lit("#split"))), 1, 2), 16, 10).cast("long")
+    val u = Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#split")), 2)
     val base = Tables.documents(s, d)
       .select($"lang",
         when(u < 204L, "train").when(u < 230L, "val").otherwise("test")
@@ -2412,8 +2411,7 @@ object DecisionQueries {
       .agg(max(($"event_type" === "purchase" && $"value" >= 200.0)
         .cast("long")).as("converted"))
       .withColumn("arm",
-        when(conv(substring(md5_fast(concat($"user_id".cast("string"),
-          lit("#exp1"))), 1, 8), 16, 10).cast("long") % 2 === 0,
+        when(Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0,
           lit("control")).otherwise(lit("treatment")))
     val arms = users.agg(
         sum(when($"arm" === "control", 1L).otherwise(0L)).as("n_a"),
@@ -2510,8 +2508,7 @@ object DecisionQueries {
   def q544(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     def present(r: Int): Column =
-      (conv(substring(md5_fast(concat($"doc_id".cast("string"), lit(s"#kr$r"))),
-        1, 8), 16, 10).cast("long") % 5 =!= 0).cast("long")
+      (Fx.md5Prefix(concat($"doc_id".cast("string"), lit(s"#kr$r")), 8) % 5 =!= 0).cast("long")
     val rated = Tables.documents(s, d)
       .select(present(1).as("m1"), present(2).as("m2"), present(3).as("m3"),
         ($"lang" === "en").cast("long").as("v1"),
@@ -2699,8 +2696,7 @@ object DecisionQueries {
       .agg(max(($"event_type" === "purchase" && $"value" >= 200.0)
         .cast("long")).as("converted"))
       .withColumn("ctl",
-        (conv(substring(md5_fast(concat($"user_id".cast("string"),
-          lit("#exp1"))), 1, 8), 16, 10).cast("long") % 2 === 0)
+        (Fx.md5Prefix(concat($"user_id".cast("string"), lit("#exp1")), 8) % 2 === 0)
           .cast("long"))
     users.agg(
         sum($"ctl").as("n_a"),
@@ -2853,8 +2849,8 @@ object DecisionQueries {
     val o = Tables.orders(s, d).select($"o_orderkey",
       $"o_orderpriority".as("grp"),
       floor($"o_totalprice" * 100).cast("long").as("cents"),
-      (conv(substring(md5_fast(concat($"o_orderkey".cast("string"),
-        lit("#conf"))), 1, 8), 16, 10) % 3).cast("int").as("fold"))
+      (Fx.md5Prefix(concat($"o_orderkey".cast("string"), lit("#conf")), 8) % 3)
+        .cast("int").as("fold"))
       .transform(Fx.materialize)
     val train = o.filter($"fold" === 0)
     val nTrain = train.groupBy($"grp").agg(count(lit(1)).as("n_train"))

@@ -384,10 +384,8 @@ object DedupQueries {
         when(size($"w") >= 3,
           transform(sequence(lit(1), size($"w") - 2),
             i => struct(i.as("pos"),
-              conv(substring(md5_fast(
-                concat_ws(" ", element_at($"w", i), element_at($"w", i + 1),
-                  element_at($"w", i + 2))), 1, 15), 16, 10)
-                .cast("long").as("h"))))
+              Fx.md5Prefix(concat_ws(" ", element_at($"w", i),
+                element_at($"w", i + 1), element_at($"w", i + 2)), 15).as("h"))))
           .otherwise(array().cast("array<struct<pos:int,h:bigint>>"))).as("g"))
       .select($"doc_id", $"g.pos".as("pos"), $"g.h".as("h"))
     val frame = Window.partitionBy($"doc_id").orderBy($"pos")
@@ -464,8 +462,8 @@ object DedupQueries {
       .select($"doc_id",
         coalesce($"component", $"doc_id").as("component"))
       .withColumn("split",
-        when(pmod(conv(substring(md5_fast($"component".cast("string")), 1, 8), 16, 10)
-          .cast("long"), lit(10L)) === 0L, "eval").otherwise("train"))
+        when(pmod(Fx.md5Prefix($"component".cast("string"), 8), lit(10L)) === 0L, "eval")
+          .otherwise("train"))
     val leaks = nearDup
       .join(assigned.select($"doc_id".as("a"), $"split".as("split_a")), "a")
       .join(assigned.select($"doc_id".as("b"), $"split".as("split_b")), "b")
@@ -809,8 +807,7 @@ object DedupQueries {
     val nSh = 16
     val docs = Tables.documents(s, d).select(
       md5_fast($"text").as("fp"),
-      (conv(substring(md5_fast(concat($"doc_id".cast("string"), lit("#shard"))), 1, 8), 16, 10)
-        .cast("long") % nSh).as("s_id"))
+      (Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#shard")), 8) % nSh).as("s_id"))
     val groups = docs
       .groupBy($"fp")
       .agg(count(lit(1)).as("k"),

@@ -4,7 +4,6 @@ import graft.{Fx, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** Event-stream analytics in batch form (the streaming variants live in
   * graft.streaming and share the same column logic — `Trigger
@@ -1488,7 +1487,7 @@ object EventQueries {
       .groupBy($"user_id")
       .agg(min(epochDay($"ts")).as("first_day"), max(epochDay($"ts")).as("last_day"))
       .withColumn("grp",
-        (conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#lr"))), 1, 8), 16, 10) % 2)
+        (Fx.md5Prefix(concat($"user_id".cast("string"), lit("#lr")), 8) % 2)
           .cast("int"))
       .transform(Fx.materialize)
     val maxDay = spans.agg(max($"last_day").as("m"))
@@ -4048,8 +4047,7 @@ object EventQueries {
       .crossJoin(broadcast(st.select($"n")))
       .select($"i", $"n", explode(sequence(lit(0), lit(bN - 1))).as("b"))
       .select($"b",
-        (conv(substring(md5_fast(concat($"b", lit("_"), $"i")), 1, 8), 16, 10)
-          .cast("long") % $"n").as("rn"))
+        (Fx.md5Prefix(concat($"b", lit("_"), $"i"), 8) % $"n").as("rn"))
     val means = draws.join(g.select($"rn", $"rev"), "rn")
       .groupBy($"b")
       .agg(sum($"rev".cast("decimal(38,0)")).as("s"), count(lit(1)).as("nb"))

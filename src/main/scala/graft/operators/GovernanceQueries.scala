@@ -138,8 +138,7 @@ object GovernanceQueries {
     * on the md5 grid both engines share. */
   def q176(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val fp = conv(substring(md5_fast(concat_ws("|",
-      $"doc_id", $"lang", $"source", $"n_chars")), 1, 15), 16, 10).cast("long")
+    val fp = Fx.md5Prefix(concat_ws("|", $"doc_id", $"lang", $"source", $"n_chars"), 15)
     Tables.documents(s, d)
       .select(($"doc_id" % 64).as("bucket"), fp.as("fp"))
       .groupBy($"bucket")
@@ -901,8 +900,7 @@ object GovernanceQueries {
   def q244(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     def pick(c: org.apache.spark.sql.Column) =
-      conv(substring(md5_fast(concat(c.cast("string"), lit("#sar"))), 1, 8), 16, 10)
-        .cast("long") % 100L === 0L
+      Fx.md5Prefix(concat(c.cast("string"), lit("#sar")), 8) % 100L === 0L
     // materialized: the ~1%-sampled subject list broadcasts into all
     // three entity probes — without it each probe re-scans customer
     val subjects = Tables.customer(s, d)
@@ -2280,8 +2278,7 @@ object GovernanceQueries {
       .groupBy($"user_id")
       .agg(max(($"event_type" === "purchase").cast("long")).as("t"))
       .withColumn("flip",
-        ((conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#rr"))),
-          1, 8), 16, 10) % 4) === 0).cast("long"))
+        ((Fx.md5Prefix(concat($"user_id".cast("string"), lit("#rr")), 8) % 4) === 0).cast("long"))
       .withColumn("reported",
         ($"t" + $"flip") % 2) // XOR on 0/1 longs
     bits.agg(count(lit(1)).as("n_users"),
@@ -2491,8 +2488,8 @@ object GovernanceQueries {
           Window.partitionBy(md5_fast($"text")))).cast("long").as("keep_dedup"),
         (graft.functions.TextAnalysis.qualityMicro($"text") >= 500000L)
           .cast("long").as("keep_quality"),
-        (pmod(conv(substring(md5_fast(concat($"doc_id".cast("string"),
-          lit("#split"))), 1, 8), 16, 10).cast("long"), lit(10L)) =!= 0L)
+        (pmod(Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#split")), 8),
+          lit(10L)) =!= 0L)
           .cast("long").as("in_train"))
     staged.groupBy($"lang")
       .agg(count(lit(1)).as("n_raw"),

@@ -3,7 +3,6 @@ package graft.operators
 import graft.{Fx, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** Iterative graph computation as a DataFrame LOOP (the pattern for
   * fixed-point algorithms when GraphX's Pregel is more machinery than
@@ -626,8 +625,7 @@ object GraphQueries {
     val s = active.sparkSession
     import s.implicits._
     val hashed = active.withColumn("__h",
-      conv(substring(md5_fast(concat($"user_id".cast("string"), lit("#coact"))), 1, 8),
-        16, 10).cast("long"))
+      Fx.md5Prefix(concat($"user_id".cast("string"), lit("#coact")), 8))
     val kept = graft.plans.TopK.perGroup(hashed, cap, Seq("hr"),
         Seq(graft.plans.TopK.asc("__h"), graft.plans.TopK.asc("user_id")))
       .drop("__h")

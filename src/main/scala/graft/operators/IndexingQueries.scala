@@ -336,8 +336,8 @@ object IndexingQueries {
     */
   def q168(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val u = conv(substring(md5_fast(concat($"doc_id".cast("string"), lit("#bk"))), 1, 8), 16, 10)
-      .cast("long").cast("double") / 4294967296.0
+    val u = Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#bk")), 8)
+      .cast("double") / 4294967296.0
     val base = Tables.documents(s, d).select($"source", $"doc_id", u.as("u"))
     graft.plans.TopK.perGroup(base, 10, Seq("source"),
       Seq(graft.plans.TopK.asc("u"), graft.plans.TopK.asc("doc_id")))

@@ -3,7 +3,6 @@ package graft.operators
 import graft.{Fx, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** Round-13 second batch: the remaining classical-inference families
   * the registry lacked, each placed beside its existing relative —
@@ -927,8 +926,7 @@ object InferenceQueries {
     // the KMV set semantics), fold each partition to its k smallest
     // distinct hashes, reduce the tiny union. No value-domain shuffle.
     val hashed = raw.select($"colname",
-      expr("cast(conv(substring(md5(concat(v, '#kmv')), 1, 13), 16, 10) " +
-        "as bigint)").as("h13"))
+      Fx.md5Prefix(concat($"v", lit("#kmv")), 13).as("h13"))
     val kept = graft.plans.TopK.perGroup(
         kMinDistinct(hashed, "colname", "h13", 64).distinct(),
         64, Seq("colname"), Seq(graft.plans.TopK.asc("h13")))
@@ -1451,8 +1449,7 @@ object InferenceQueries {
       .select($"cv.colname".as("colname"), $"cv.v".as("v"))
       .filter($"v".isNotNull)
       .select($"colname",
-        expr("cast(conv(substring(md5(concat(v, '#kmv')), 1, 13), 16, 10) " +
-          "as bigint)").as("h13"))
+        Fx.md5Prefix(concat($"v", lit("#kmv")), 13).as("h13"))
     val est = graft.plans.TopK.perGroup(
         kMinDistinct(hashed, "colname", "h13", 64).distinct(),
         64, Seq("colname"), Seq(graft.plans.TopK.asc("h13")))
@@ -1867,14 +1864,13 @@ object InferenceQueries {
     val docs = Tables.documents(s, d)
       .filter($"text".isNotNull)
       .select(substring($"text", 1, 60).as("grp"),
-        (conv(substring(md5_fast(concat($"doc_id".cast("string"), lit("#split"))),
-          1, 8), 16, 10).cast("long") % 5 === 0).cast("long").as("is_test"))
+        (Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#split")), 8) % 5 === 0)
+          .cast("long").as("is_test"))
     val groups = docs.groupBy($"grp")
       .agg(count(lit(1)).as("k"), sum($"is_test").as("kt"))
       .filter($"k" >= 2)
       .withColumn("gflag",
-        (conv(substring(md5_fast(concat($"grp", lit("#split"))), 1, 8), 16, 10)
-          .cast("long") % 5 === 0).cast("long"))
+        (Fx.md5Prefix(concat($"grp", lit("#split")), 8) % 5 === 0).cast("long"))
     groups.agg(count(lit(1)).as("n_dup_groups"),
         sum(expr("k * (k - 1) div 2")).as("n_dup_pairs"),
         sum(expr("kt * (k - kt)")).as("crossing_naive"),
@@ -3415,8 +3411,7 @@ object InferenceQueries {
         sum(when($"pv".isNull || $"pv" =!= $"v", 1L).otherwise(0L))
           .as("n_runs"))
     val hashed = vals.select($"colname",
-      expr("cast(conv(substring(md5(concat(v, '#kmv')), 1, 13), 16, 10) " +
-        "as bigint)").as("h13"))
+      Fx.md5Prefix(concat($"v", lit("#kmv")), 13).as("h13"))
     val est = graft.plans.TopK.perGroup(
         kMinDistinct(hashed, "colname", "h13", 64).distinct(),
         64, Seq("colname"), Seq(graft.plans.TopK.asc("h13")))

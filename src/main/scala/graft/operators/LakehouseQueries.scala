@@ -4,7 +4,6 @@ import graft.{Fx, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** Lakehouse table-maintenance operators, round 7: compaction planning
   * (the small-file problem) and zone-map pruning audits (the
@@ -229,8 +228,7 @@ object LakehouseQueries {
   /** md5-grid u(0,1) keyed on the change key — the shared seeded-
     * uniform idiom (q98/q26), so DuckDB derives the identical feed. */
   private def cdcU(key: org.apache.spark.sql.Column) =
-    conv(substring(md5_fast(concat(key.cast("string"), lit("#cdc"))), 1, 8), 16, 10)
-      .cast("long").cast("double") / 4294967296.0
+    Fx.md5Prefix(concat(key.cast("string"), lit("#cdc")), 8).cast("double") / 4294967296.0
 
   /** q225 — CDC MERGE: apply a change feed (op ∈ I/U/D) onto a keyed
     * snapshot in ONE full-outer hash join — the relational core of

@@ -4,7 +4,6 @@ import graft.{Fx, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** Scale-path operators, each the "what you actually run at 100 TB"
   * counterpart of an exact operator elsewhere in the registry — and
@@ -53,8 +52,7 @@ object ScaleQueries {
   def q147(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val restBits = 26 // 32-bit hash = 6 bucket bits + 26 rank bits
-    val h = conv(substring(md5_fast($"o_custkey".cast("string")), 1, 8), 16, 10)
-      .cast("long")
+    val h = Fx.md5Prefix($"o_custkey".cast("string"), 8)
     val rest = h.bitwiseAND(lit((1L << restBits) - 1))
     val hashed = Tables.orders(s, d).select(
       $"o_orderpriority".as("priority"),
@@ -128,8 +126,9 @@ object ScaleQueries {
       "i -> md5(array_to_string(w[i:i+7], ' '))))"
 
   /** bit position idx∈{0,1}: 32-bit md5 chunk of the gram mod 2^18 —
-    * value-identical to `pmod(conv(substring(hex, 1|9, 8), 16, 10),
-    * 262144)` (Md5ChunksSpec pins chunk ≡ conv chain). */
+    * value-identical to the oracle's `('0x' || substr(hex, 1|9, 8))::BIGINT
+    * % 262144` (chunk 0 is `Fx.md5Prefix(g, 8)`; Md5ChunksSpec pins
+    * both against the builtin md5). */
   private def bloomPos(g: Column, idx: Int): Column =
     pmod(graft.plans.GraftFunctions.md5_chunk(g, idx), lit(262144L))
 
@@ -387,8 +386,7 @@ object ScaleQueries {
     import s.implicits._
     val restBits = 26
     val win = 6 // hours per sliding window
-    val h = conv(substring(md5_fast($"user_id".cast("string")), 1, 8), 16, 10)
-      .cast("long")
+    val h = Fx.md5Prefix($"user_id".cast("string"), 8)
     val rest = h.bitwiseAND(lit((1L << restBits) - 1))
     val hashed = Tables.events(s, d).select(
       expr("unix_micros(ts) div 3600000000").as("hour"),

@@ -1,15 +1,14 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Fx, QueryDef, Tables}
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.md5_fast
 
 /** SimHash near-dup fingerprinting.
   *
   * q55 is a 16-bit SimHash built from pure column expressions
-  * (md5-hex → bigint via conv(); bit votes; hamming distance on
+  * (md5 prefix → bigint via Fx.md5Prefix; bit votes; hamming distance on
   * adjacent docs) so DuckDB can mirror it exactly ('0x…'::BIGINT).
   * q56 uses the native 64-bit Catalyst expression (graft.plans
   * .SimHash64), hash-verified against a DuckDB mirror that reproduces
@@ -30,17 +29,9 @@ object SimHashQueries {
     import s.implicits._
     val words = Tables.documents(s, d)
       .select($"doc_id", explode(array_distinct(split($"text", " "))).as("w"))
-      // r20 (guide step 2, the r19 verdict's digest-tail item): the
-      // first 15 hex chars of md5(w) are digest bits [0, 60), i.e.
-      // (chunk0 << 28) | (chunk1 >>> 4) — both chunks share ONE
-      // memoized digest (Md5ChunksUtil.chunkAt), so the hot path drops
-      // the 32-char hex string, the substring copy and the radix-16
-      // parse per word (A/B at sf0.1: −13% wall, identical output;
-      // Md5ChunksSpec pins the 15-hex-char composition). The oracle
-      // keeps the conv/substring statement of the same bits.
-      .withColumn("h",
-        shiftleft(GraftFunctions.md5_chunk($"w", 0), 28)
-          .bitwiseOR(shiftright(GraftFunctions.md5_chunk($"w", 1), 4)))
+      // word hash: the first 15 hex chars of md5(w), the oracle's
+      // ('0x' || substr(md5(w), 1, 15))::BIGINT
+      .withColumn("h", Fx.md5Prefix($"w", 15))
     val votes = words.groupBy($"doc_id").agg(simhash16($"h").head, simhash16($"h").tail: _*)
     val sh = votes.select($"doc_id",
       (0 until bits).map(i => when(col(s"v$i") > 0, lit(1L << i)).otherwise(lit(0L)))

@@ -321,7 +321,7 @@ object TextQueries {
     val sk = toks.agg(graft.plans.CountMin.cm_sketch($"w", depth, width).as("sk"))
     val estCols = (0 until depth).map { r =>
       val cell = pmod(
-        conv(substring(md5_fast(concat($"w", lit("#" + r))), 1, 8), 16, 10).cast("long"),
+        Fx.md5Prefix(concat($"w", lit("#" + r)), 8),
         lit(width.toLong))
       element_at(element_at($"sk", r + 1), (cell + 1L).cast("int"))
     }

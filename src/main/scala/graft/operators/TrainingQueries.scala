@@ -316,8 +316,8 @@ object TrainingQueries {
     * score — cluster-stable importance sampling, no RNG state. */
   def q98(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val u = conv(substring(md5_fast(concat($"doc_id".cast("string"), lit("#wsamp"))), 1, 8), 16, 10)
-      .cast("long").cast("double") / 4294967296.0
+    val u = Fx.md5Prefix(concat($"doc_id".cast("string"), lit("#wsamp")), 8)
+      .cast("double") / 4294967296.0
     val q = graft.functions.TextAnalysis.qualityScore($"text")
     Tables.documents(s, d)
       .select($"doc_id", $"lang", q.as("quality"), u.as("u"))
@@ -1079,7 +1079,7 @@ object TrainingQueries {
     val cust = Tables.customer(s, d).select($"c_custkey", $"c_mktsegment")
     val ord = Tables.orders(s, d).select($"o_custkey",
       floor($"o_totalprice" * 100).cast("long").as("cents"),
-      (conv(substring(md5_fast(concat($"o_orderkey".cast("string"), lit("#te"))), 1, 8), 16, 10) % 5)
+      (Fx.md5Prefix(concat($"o_orderkey".cast("string"), lit("#te")), 8) % 5)
         .cast("int").as("fold"))
     val cells = ord.join(cust, $"o_custkey" === $"c_custkey")
       .groupBy($"c_mktsegment", $"fold")

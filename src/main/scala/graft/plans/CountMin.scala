@@ -14,24 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * probe-side column expressions. The hash family is md5-derived so a
   * DuckDB oracle can reproduce every cell exactly:
   * cell(item, r) = int(first 8 hex chars of md5(item || "#" || r)) mod width
-  * — in SQL, `('0x' || substr(md5(item || '#' || r), 1, 8))::BIGINT % width`.
+  * — in SQL, `('0x' || substr(md5(item || '#' || r), 1, 8))::BIGINT % width`,
+  * and on a Spark column `Fx.md5Prefix(concat(item, '#r'), 8) % width`.
+  * The digest is [[Md5ChunksUtil]]'s per-thread one: chunk 0 is those
+  * 8 hex chars.
   */
 object CountMin {
-  // One digest instance per executor thread: cellOf runs depth times
-  // per input row, and MessageDigest.getInstance allocates.
-  private val mdPool = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  def cellOf(item: String, r: Int, width: Int): Int = {
-    val md = mdPool.get()
-    md.reset()
-    val d = md.digest((item + "#" + r).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val v = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    (v % width).toInt
-  }
+  def cellOf(item: String, r: Int, width: Int): Int =
+    (Md5ChunksUtil.chunkAt(UTF8String.fromString(item + "#" + r), 0) % width).toInt
 
   def cm_sketch(c: Column, depth: Int, width: Int): Column =
     Bridge.column(CountMinSketch(Bridge.expression(c), depth, width).toAggregateExpression())

@@ -82,9 +82,10 @@ object Md5ChunksUtil {
   }
 
   /** The four 32-bit big-endian chunks of md5(utf8Bytes(s)) as
-    * unsigned values in longs — element i is byte-identical to
-    * `conv(substring(md5(s), 8·i+1, 8), 16, 10)::long` (the q554
-    * oracle-family coefficient derivation) without ever materializing
+    * unsigned values in longs — element i equals the oracle's
+    * `('0x' || substr(md5(s), 8·i+1, 8))::BIGINT` (the q554
+    * coefficient derivation; `Fx.md5Prefix` composes chunks 0 and 1
+    * into any 1–15 hex-digit prefix) without ever materializing
     * the 32-char hex string or running four radix-16 string parses
     * per token (SCALE.md's r17 dissection pinned the md5 family's 2×
     * per-doc cost drift at 1M docs on exactly that string churn). */

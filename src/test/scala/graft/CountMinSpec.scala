@@ -63,6 +63,19 @@ class CountMinSpec extends SparkSpec {
     assert(grid(1) == grid(16))
   }
 
+  test("cellOf == conv(substring(md5(item#r), 1, 8), 16, 10) % width via builtin md5") {
+    import spark.implicits._
+    val items = (0 until 200).map(i => s"tok$i") ++ Seq("", "Ünïcödé", "日本語")
+    val rows = for (w <- items; r <- 0 until depth) yield (w, r)
+    val viaSql = rows.toDF("w", "r")
+      .select($"w", $"r", (conv(substring(md5(concat($"w", lit("#"), $"r")), 1, 8), 16, 10)
+        .cast("long") % width).cast("int").as("cell"))
+      .collect().map(x => (x.getString(0), x.getInt(1)) -> x.getInt(2)).toMap
+    rows.foreach { case (w, r) =>
+      assert(CountMin.cellOf(w, r, width) === viaSql((w, r)), s"$w#$r")
+    }
+  }
+
   test("unit: buffer add/merge agree with cellOf") {
     val a = new CmBuffer(depth, width)
     val b = new CmBuffer(depth, width)

@@ -30,17 +30,28 @@ class Md5ChunksSpec extends SparkSpec {
     viaNative.flatten.foreach(v => assert(v >= 0L && v < 4294967296L, v))
   }
 
+  // Fx.md5Prefix(t, k) == conv(substring(md5(t), 1, k), 16, 10) at every
+  // width the engine uses (q527: 2, the splits/arms/folds: 8, KMV: 13,
+  // q55/q176/q263: 15, i.e. (chunk0 << 28) | (chunk1 >>> 4)) plus the
+  // 1-digit edge; null in, null out on both the one- and two-chunk paths;
+  // 0 and 16 digits refused (16 would overflow a signed BIGINT)
   test("15-hex-char composition: (chunk0 << 28) | (chunk1 >>> 4) == conv(substring(md5, 1, 15), 16, 10) — the q55 simhash16 word hash") {
     import spark.implicits._
     val df = texts.toDF("t")
-    val viaConv = df.select(
-      conv(substring(md5($"t"), 1, 15), 16, 10).cast("long").as("h"))
-      .collect().map(_.getLong(0))
-    val viaChunks = df.select(
-      shiftleft(GraftFunctions.md5_chunk($"t", 0), 28)
-        .bitwiseOR(shiftright(GraftFunctions.md5_chunk($"t", 1), 4)).as("h"))
-      .collect().map(_.getLong(0))
-    assert(viaChunks.toSeq === viaConv.toSeq)
+    for (k <- Seq(1, 2, 8, 13, 15)) {
+      val viaConv = df.select(
+        conv(substring(md5($"t"), 1, k), 16, 10).cast("long").as("h"))
+        .collect().map(_.getLong(0))
+      val viaPrefix = df.select(Fx.md5Prefix($"t", k).as("h"))
+        .collect().map(_.getLong(0))
+      assert(viaPrefix.toSeq === viaConv.toSeq, s"hexChars=$k")
+    }
+    val nullRow = Seq[Option[String]](None).toDF("t")
+      .select(Fx.md5Prefix($"t", 8), Fx.md5Prefix($"t", 15)).collect()
+    assert(nullRow.head.isNullAt(0) && nullRow.head.isNullAt(1))
+    Seq(0, 16).foreach { k =>
+      intercept[IllegalArgumentException](Fx.md5Prefix($"t", k))
+    }
   }
 
   test("scalar md5_chunk(w, i) matches the array form element-wise (memoized digest)") {
