@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB oracle can reproduce every cell exactly:
   * cell(item, r) = int(first 8 hex chars of md5(item || "#" || r)) mod width
   * — in SQL, `('0x' || substr(md5(item || '#' || r), 1, 8))::BIGINT % width`,
-  * and on a Spark column `Fx.md5Prefix(concat(item, '#r'), 8) % width`.
+  * and on a Spark column `Fx.md5Prefix(concat(item, lit("#" + r)), 8) % width`.
   * The digest is [[Md5ChunksUtil]]'s per-thread one: chunk 0 is those
   * 8 hex chars.
   */
